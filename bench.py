@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): run every registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print per-query timings as JSON.
+(default: the host's CPU count) and print per-query timings as JSON.
 
 Each query is forced end-to-end with the `noop` sink (materializes every
 output column on the executors, no driver collect) so timings reflect the
@@ -77,6 +77,18 @@ def names_digest(names) -> str:
     return hashlib.sha256(",".join(sorted(names)).encode()).hexdigest()[:12]
 
 
+def run_order(names) -> list[str]:
+    """Batch queries alphabetical, then the streaming queries. Streams run
+    LAST: their Python state-store workers and file staging contaminate
+    the next timed slot (round-1 bench showed the query scheduled right
+    after sessionize_stream reading 30-50x its fresh-session floor). Every
+    stream's name carries a `_stream` token, not always as the suffix
+    (dedup_stream_ttl)."""
+    names = sorted(names)
+    streams = [n for n in names if "_stream" in n]
+    return [n for n in names if n not in streams] + streams
+
+
 def run_canary(spark) -> float:
     """One canary shot: fixed synthetic work (no testdata, no registry)
     exercising the suite's two cost axes — codegen'd per-row compute and
@@ -147,25 +159,26 @@ def build_output_lines(
         compact["c_t"] = canary_t
         compact["c_slot"] = canary_slot
     line = json.dumps(compact, separators=(",", ":"))
-    # defensive shedding, least-essential first: canary series, slowest,
-    # then t_alpha — totals always survive
-    for key in ("c_slot", "c_t", "slowest", "t_alpha"):
+    # defensive shedding, least-essential first: the canary series (c_t
+    # and c_slot only make sense together), slowest, then t_alpha —
+    # totals always survive
+    for keys in (("c_slot", "c_t"), ("slowest",), ("t_alpha",)):
         if len(line) <= FINAL_LINE_BUDGET:
             break
-        compact.pop(key, None)
+        for key in keys:
+            compact.pop(key, None)
         line = json.dumps(compact, separators=(",", ":"))
     return [full, line]
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")  # get_spark sizes local[N] from this
     try:
         sf = float(Path(sf_dir).name.removeprefix("sf"))
     except ValueError:
         sf = -1.0
 
-    from prueba_tecnica_http_client_etl_spark.session import get_spark
+    from prueba_tecnica_http_client_etl_spark.session import default_parallelism, get_spark
     from prueba_tecnica_http_client_etl_spark import registry
 
     spark = get_spark(f"bench-sf{sf}")
@@ -177,7 +190,7 @@ def main() -> int:
     # session pays ~2.5s of worker spawn + Arrow init that would otherwise
     # be billed to whichever Arrow query happens to run first
     # (multimodal_frame_sample, alphabetically). One worker per core.
-    n_workers = int(os.environ["SPARK_GRAFT_CPUS"])
+    n_workers = default_parallelism()
     spark.range(n_workers * 100).repartition(n_workers).mapInPandas(
         lambda batches: batches, "id long"
     ).write.format("noop").mode("overwrite").save()
@@ -191,13 +204,7 @@ def main() -> int:
             _r.r_regionkey == _F.col("k")).write.format("noop").mode("overwrite").save()
 
     all_queries = registry.queries()
-    # Streaming queries run LAST: their Python state-store workers and file
-    # staging contaminate the next timed slot (round-1 bench showed the query
-    # scheduled right after sessionize_stream reading 30-50x its fresh-session
-    # floor). Batch queries first, alphabetical; streams at the end.
-    names = sorted(all_queries)
-    stream_names = [n for n in names if n.endswith("_stream")]
-    ordered = [n for n in names if n not in stream_names] + stream_names
+    ordered = run_order(all_queries)
 
     def run_once(name: str) -> float:
         # isolate queries: some operators persist() intermediate stages

@@ -94,11 +94,13 @@ def clean_http_log(df: DataFrame) -> DataFrame:
 
 
 def pct_of_total(part: Column | str, total: Column | str) -> Column:
-    """P8 — part/total*100 with the reference's div-by-zero guard
-    (reference src/generar_reporte.py:59-61)."""
+    """P8 — part*100/total with the reference's div-by-zero guard
+    (reference src/generar_reporte.py:59-61). Multiply first, as the SQL
+    twins do: part/total*100 lands on the other side of a .xx5 rounding
+    tie (23/160*100 = 14.374999..., 23*100/160 = 14.375)."""
     p = F.col(part) if isinstance(part, str) else part
     t = F.col(total) if isinstance(total, str) else total
-    return F.when(t > 0, p / t * 100.0).otherwise(F.lit(0.0))
+    return F.when(t > 0, p * 100.0 / t).otherwise(F.lit(0.0))
 
 
 def alert_flag(value: Column | str, threshold: float) -> Column:

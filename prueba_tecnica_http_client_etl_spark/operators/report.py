@@ -103,12 +103,8 @@ def global_metrics(kpi: DataFrame) -> DataFrame:
     total = F.sum("requests_total")
     return kpi.agg(
         total.alias("requests_total"),
-        round2(
-            F.when(total > 0, F.sum("success_2xx") / total * 100.0).otherwise(F.lit(0.0))
-        ).alias("pct_success"),
-        round2(
-            F.when(total > 0, (F.sum("client_4xx") + F.sum("server_5xx")) / total * 100.0).otherwise(F.lit(0.0))
-        ).alias("pct_errors"),
+        round2(pct_of_total(F.sum("success_2xx"), total)).alias("pct_success"),
+        round2(pct_of_total(F.sum("client_4xx") + F.sum("server_5xx"), total)).alias("pct_errors"),
         round2(F.percentile(F.col("p90_elapsed_ms"), F.lit(0.9))).alias("p90_global_approx"),
     )
 

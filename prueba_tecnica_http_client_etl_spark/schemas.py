@@ -8,6 +8,8 @@ reader, and so JSONL ingestion never pays inference.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import types as T
 
 # Raw HTTP call-log record (reference src/generar_datos.py:50-58).
@@ -92,9 +94,52 @@ TESTDATA_TABLES = [
 ]
 
 
+# Parquet schema inference reads the file footer in a Spark job (about
+# 0.1 s warm on 4 cores); a read with a known schema runs no job (about
+# 0.02 s). Every registry query scans its tables afresh, so the inferred
+# StructType is memoized per file identity plus nanosAsLong, the one conf
+# the engine flips that changes the inferred types. Only the schema is
+# shared: each load_table call still builds its own relation, so a query
+# that loads one table twice can self-join.
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """(realpath, inode, size, mtime_ns) of a file, or of every file under
+    a directory (the multi-file tables scale_check.py writes): any rewrite
+    changes the key, so a stale schema is never reused."""
+    real = os.path.realpath(path)
+    if not os.path.isdir(real):
+        st = os.stat(real)
+        return (real, st.st_ino, st.st_size, st.st_mtime_ns)
+    files = []
+    for root, dirs, names in os.walk(real):
+        dirs.sort()
+        for n in sorted(names):
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            files.append((os.path.relpath(f, real), st.st_ino, st.st_size, st.st_mtime_ns))
+    return (real, tuple(files))
+
+
+def _parquet_schema(spark, path: str) -> T.StructType:
+    if not os.path.exists(path):
+        # a remote URI or a missing table: no local identity to key on, so
+        # infer every time and let Spark report a missing path as before
+        return spark.read.parquet(path).schema
+    key = (_file_identity(path), spark.conf.get(_NANOS_AS_LONG, "false"))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        # two threads racing here both infer; the value is the same
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark, sf_dir: str, name: str):
-    """Parquet scan with Catalyst pushdown; schemas come from parquet footers,
-    with timestamp encodings normalized to one engine-wide convention:
+    """Parquet scan with Catalyst pushdown; schemas come from parquet footers
+    (inferred once per file, `_parquet_schema`), with timestamp encodings
+    normalized to one engine-wide convention:
     every timestamp column is TIMESTAMP_LTZ holding the file's wall-clock
     value interpreted as UTC — exactly how DuckDB's naive TIMESTAMP treats
     the same bytes, so oracle comparisons (epoch(), date_format) agree.
@@ -110,15 +155,17 @@ def load_table(spark, sf_dir: str, name: str):
       an exact identity on wall-clock values under the UTC session timezone
       the engine mandates (session.py).
     """
-    if name == "events" and spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
+    if name == "events" and spark.conf.get(_NANOS_AS_LONG, "false") != "true":
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     if name == "events" and dtypes.get("ts") == "bigint":
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        dtypes = dict(df.dtypes)
+        dtypes["ts"] = "timestamp"
     ntz = [c for c, t in dtypes.items() if t == "timestamp_ntz"]
     if ntz:
         from pyspark.sql import functions as F

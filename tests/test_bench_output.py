@@ -77,3 +77,40 @@ def test_final_line_sheds_detail_rather_than_overflow():
     assert len(final) <= bench.FINAL_LINE_BUDGET
     parsed = json.loads(final)
     assert parsed["value"] == round(sum(timings.values()), 3)
+
+
+def test_canary_series_is_shed_as_one_unit():
+    # sweep the canary length across the budget edge: whenever shedding
+    # kicks in, c_t must never survive without its c_slot (or vice versa)
+    names, timings, reran = _fake_suite()
+    for n in range(1, 300, 3):
+        c_t, c_slot = [12.345] * n, list(range(n))
+        final = json.loads(bench.build_output_lines(timings, reran, 0.1, 32, c_t, c_slot)[-1])
+        assert ("c_t" in final) == ("c_slot" in final), n
+
+
+def test_streams_run_last_including_non_suffix_names():
+    import inspect
+
+    order = bench.run_order(registry.QUERIES)
+    assert sorted(order) == sorted(registry.QUERIES)
+    # a streaming query is one that stages its input as a file stream
+    streams = {n for n, fn in registry.QUERIES.items() if "_stream_staging_path" in inspect.getsource(fn)}
+    assert len(streams) == 19
+    assert set(order[-len(streams):]) == streams
+    assert "dedup_stream_ttl" in streams
+
+
+def test_normalize_bench_tolerates_partial_canary(tmp_path):
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    import normalize_bench
+
+    names = sorted(registry.QUERIES)
+    final = {"metric": "query_suite_total_sec", "t_alpha": [1.0] * len(names),
+             "names_sha256": bench.names_digest(names), "c_t": [0.3, 0.4]}
+    log = tmp_path / "bench.log"
+    log.write_text('log line mentioning "metric" without the JSON object\n' + json.dumps(final) + "\n")
+    loaded = normalize_bench.load(str(log))
+    assert loaded == final
+    # c_t without c_slot cannot be interpolated: raw seconds come back
+    assert normalize_bench.normalized(loaded) == dict(zip(names, final["t_alpha"]))

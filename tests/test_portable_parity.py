@@ -77,3 +77,35 @@ def test_salted_u60_parity_with_duckdb(spark, texts):
     assert got == want
     # 60-bit contract: non-negative and below 2^60 in both engines
     assert all(0 <= v < (1 << 60) for v in got)
+
+
+def test_report_percentages_match_sql_twins_on_rounding_tie(spark):
+    # 23/160*100 = 14.374999... but 23*100/160 = 14.375 exactly, which
+    # round2 takes to 14.38: the Spark side must multiply first, like its
+    # SQL twin, or the two engines land on opposite sides of the tie
+    from prueba_tecnica_http_client_etl_spark.operators.report import (
+        global_metrics,
+        report_by_endpoint,
+        sql_global_metrics_select,
+        sql_report_by_endpoint_select,
+    )
+    from prueba_tecnica_http_client_etl_spark.schemas import KPI_SCHEMA
+
+    row = ("2026-01-01", "/get", 160, 23, 23, 0, 0, 10.0, 20.0)
+    kpi = spark.createDataFrame([row], KPI_SCHEMA)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE kpi (date_utc VARCHAR, endpoint_base VARCHAR, requests_total BIGINT, "
+        "success_2xx BIGINT, client_4xx BIGINT, server_5xx BIGINT, parse_errors BIGINT, "
+        "avg_elapsed_ms DOUBLE, p90_elapsed_ms DOUBLE)"
+    )
+    con.execute("INSERT INTO kpi VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)", list(row))
+    for spark_df, sql in (
+        (global_metrics(kpi), sql_global_metrics_select()),
+        (report_by_endpoint(kpi), sql_report_by_endpoint_select()),
+    ):
+        got = spark_df.collect()[0].asDict()
+        rel = con.sql(sql)
+        want = dict(zip(rel.columns, rel.fetchone()))
+        assert got == want
+        assert got["pct_success"] == 14.38

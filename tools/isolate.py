@@ -7,7 +7,8 @@ Usage:
     python tools/isolate.py QUERY [QUERY...] [--shots N] [--explain DIR] [--suffix TAG]
 
 Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32) — same contract as bench.py.
+SPARK_GRAFT_CPUS (default: the host's CPU count) — same contract as
+bench.py.
 
 This is a developer tool, not part of the driver contract; bench.py
 remains the only artifact the driver runs.
@@ -33,16 +34,15 @@ def main() -> int:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
-    from prueba_tecnica_http_client_etl_spark.session import get_spark
+    from prueba_tecnica_http_client_etl_spark.session import default_parallelism, get_spark
     from prueba_tecnica_http_client_etl_spark import registry
 
     spark = get_spark("isolate")
     spark.sparkContext.setLogLevel("ERROR")
     # same warmups as bench.py so shot 1 is comparable
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    n_workers = int(os.environ["SPARK_GRAFT_CPUS"])
+    n_workers = default_parallelism()
     spark.range(n_workers * 100).repartition(n_workers).mapInPandas(
         lambda b: b, "id long"
     ).write.format("noop").mode("overwrite").save()

@@ -37,7 +37,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def load(path: str) -> dict:
     final = None
     for line in open(path, errors="replace"):
-        if '"metric"' in line:
+        if '{"metric"' in line:
             final = json.loads(line[line.index('{"metric"'):])
     if final is None:
         raise SystemExit(f"{path}: no bench output line found")
@@ -58,7 +58,7 @@ def normalized(final: dict) -> dict[str, float]:
         )
     t = dict(zip(names, final["t_alpha"]))
     ct, cs = final.get("c_t"), final.get("c_slot")
-    if not ct:
+    if not ct or not cs:
         print("(no canary series in this run — returning raw seconds)", file=sys.stderr)
         return t
     floor = min(ct)
@@ -73,13 +73,13 @@ def normalized(final: dict) -> dict[str, float]:
                 return ct[i - 1] + f * (ct[i] - ct[i - 1])
         return ct[-1]
 
-    # slot order: batch queries alphabetical, then streams (bench.py);
-    # the rerun pass re-times >1s queries in the same order — normalize
-    # against the FIRST pass slot (the recorded min usually comes from
-    # whichever window was cleaner; first-pass position is deterministic)
-    stream = [n for n in names if n.endswith("_stream")]
-    ordered = [n for n in names if n not in stream] + stream
-    slot_of = {n: i for i, n in enumerate(ordered)}
+    # slot order: bench.run_order; the rerun pass re-times >1s queries in
+    # the same order — normalize against the FIRST pass slot (the recorded
+    # min usually comes from whichever window was cleaner; first-pass
+    # position is deterministic). BENCH_r01-r20 runs timed
+    # dedup_stream_ttl among the batch queries, so the slots around it are
+    # off by one there — small next to CANARY_STRIDE.
+    slot_of = {n: i for i, n in enumerate(bench.run_order(names))}
     return {n: round(t[n] / (canary_at(slot_of[n]) / floor), 3) for n in names}
 
 

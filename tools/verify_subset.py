@@ -22,7 +22,6 @@ def main() -> int:
         print("usage: verify_subset.py QUERY [QUERY...]", file=sys.stderr)
         return 2
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
     import duckdb
 
