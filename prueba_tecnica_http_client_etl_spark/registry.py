@@ -1536,35 +1536,35 @@ def q_ingest_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #            order), which bounds staleness: the test asserts every
 #            query older than MAX_STALENESS rounds is in this window.
 
-CURRENT_ROUND = 20
+CURRENT_ROUND = 21
 MAX_STALENESS = 4  # a row certified at round R must re-enter the window
 # by round R + MAX_STALENESS (asserted in tests/test_rotation_ledger.py)
 
 LAST_CERTIFIED: dict[str, int | None] = {
-    "clean_coerce": 19,
-    "kpi_daily": 19,
-    "kpi_report_endpoint": 19,
-    "kpi_global": 19,
+    "clean_coerce": 20,
+    "kpi_daily": 20,
+    "kpi_report_endpoint": 20,
+    "kpi_global": 20,
     "kpi_global_exact": 19,
     "kpi_anomaly_days": 19,
     "kpi_rollup": 19,
-    "pricing_summary": 17,
-    "top_revenue_orders": 16,
-    "region_revenue": 16,
-    "customers_with_open_orders": 16,
-    "customers_without_orders": 16,
-    "top_orders_per_customer": 16,
-    "supplier_running_revenue": 16,
-    "nation_presence": 16,
-    "orders_cube": 16,
-    "events_daily_pivot": 16,
-    "sessionize_events": 16,
-    "purchase_after_view_asof": 16,
-    "shipped_within_30_days": 17,
-    "events_json_stats": 17,
-    "events_distinct_users": 17,
-    "small_quantity_revenue": 17,
-    "supplier_trailing_revenue": 17,
+    "pricing_summary": 20,
+    "top_revenue_orders": 20,
+    "region_revenue": 20,
+    "customers_with_open_orders": 20,
+    "customers_without_orders": 20,
+    "top_orders_per_customer": 20,
+    "supplier_running_revenue": 20,
+    "nation_presence": 20,
+    "orders_cube": 20,
+    "events_daily_pivot": 20,
+    "sessionize_events": 20,
+    "purchase_after_view_asof": 20,
+    "shipped_within_30_days": 20,
+    "events_json_stats": 20,
+    "events_distinct_users": 20,
+    "small_quantity_revenue": 20,
+    "supplier_trailing_revenue": 20,
     "latest_event_per_user": 17,
     "user_daily_gapfill": 17,
     "top_supplier_per_quarter": 17,
@@ -1577,7 +1577,7 @@ LAST_CERTIFIED: dict[str, int | None] = {
     "snapshot_merge": 18,
     "user_retention_cohorts": 17,
     "event_funnel": 18,
-    "suppliers_blocking_orders": 19,
+    "suppliers_blocking_orders": 20,
     "rolling_active_users": 17,
     "audio_decode_stats": 18,
     "dedup_edit_distance": 17,
@@ -1619,25 +1619,25 @@ LAST_CERTIFIED: dict[str, int | None] = {
     "curation_pipeline": 19,
     "tokenize_ids": 19,
     "embedding_center_by_label": 19,
-    "sequence_pack_manifest": 16,
+    "sequence_pack_manifest": 20,
     "dedup_incremental": 19,
-    "dedup_semantic": 16,
-    "dedup_lines": 16,
-    "quality_score": 16,
-    "sequence_pack_ids": 16,
-    "dedup_substring": 16,
+    "dedup_semantic": 20,
+    "dedup_lines": 20,
+    "quality_score": 20,
+    "sequence_pack_ids": 20,
+    "dedup_substring": 20,
     "ann_ivf_learned_topk": 18,
     "ann_ivf_learned_recall": 18,
-    "bpe_pair_counts": 16,
-    "domain_mixture_plan": 16,
+    "bpe_pair_counts": 20,
+    "domain_mixture_plan": 20,
     "dedup_survivors": 18,
-    "source_overlap_matrix": 16,
-    "doc_commonness": 16,
+    "source_overlap_matrix": 20,
+    "doc_commonness": 20,
     "duplicate_rate_by_source": 19,
     "dedup_cluster_sizes": 18,
-    "pii_stats_by_source": 16,
-    "lang_confusion": 16,
-    "image_decode_stats": 16,
+    "pii_stats_by_source": 20,
+    "lang_confusion": 20,
+    "image_decode_stats": 20,
     "dedup_lsh_capped": 19,
     "dedup_lsh_cap_audit": 19,
     "embedding_pca_top": 18,
@@ -1654,8 +1654,8 @@ LAST_CERTIFIED: dict[str, int | None] = {
     "ann_ivfpq_recall": 18,
     "ann_ivfpq_rerank": 18,
     "ann_ivfpq_rerank_recall": 18,
-    "corpus_split": 16,
-    "corpus_split_stats": 16,
+    "corpus_split": 20,
+    "corpus_split_stats": 20,
     "lm_bigram_score": 19,
     "embedding_outliers": 19,
     "shingle_df_profile": 19,
@@ -1669,18 +1669,18 @@ LAST_CERTIFIED: dict[str, int | None] = {
     "ann_filtered_learned_recall": 18,
     "dsir_resample_plan": 19,
     "dsir_sample": 18,
-    "sequence_pack_ffd": 16,
+    "sequence_pack_ffd": 20,
     "training_order": 17,
     "sequence_pack_greedy": 19,
     "contamination_stats_by_source": 19,
     "dedup_image_phash": 17,
     "image_phash_band_audit": 17,
-    "bpe_train_merges": 16,
+    "bpe_train_merges": 20,
     "bpe_tokenize": 17,
     "hybrid_doc_topk": 19,
     "hybrid_doc_recall": 19,
-    "quality_train": 16,
-    "quality_gate_learned": 16,
+    "quality_train": 20,
+    "quality_gate_learned": 20,
     "hybrid_doc_lexical_recall": 19,
     "dedup_audio_fingerprint": 17,
     "multimodal_dup_consensus": 17,
@@ -1693,24 +1693,24 @@ LAST_CERTIFIED: dict[str, int | None] = {
     "corpus_build_funnel": 18,
     "kpi_daily_approx_p90": 19,
     "events_distinct_users_approx": 19,
-    "customer_value_deciles_approx": 15,
-    "kpi_daily_stream": 16,
-    "sessionize_stream": 16,
-    "dedup_stream": 16,
-    "dedup_stream_ttl": 16,
+    "customer_value_deciles_approx": 20,
+    "kpi_daily_stream": 20,
+    "sessionize_stream": 20,
+    "dedup_stream": 20,
+    "dedup_stream_ttl": 20,
     "quality_gate_stream": 17,
     "dedup_index_probe_stream": 17,
-    "lm_score_stream": 15,
+    "lm_score_stream": 20,
     "dsir_score_stream": 17,
     "dsir_sample_stream": 18,
     "contamination_bloom_stream": 17,
     "pii_scrub_stream": 17,
-    "dedup_edit_probe_stream": 15,
-    "dedup_image_probe_stream": 16,
+    "dedup_edit_probe_stream": 20,
+    "dedup_image_probe_stream": 20,
     "dedup_video_probe_stream": 17,
     "dedup_audio_probe_stream": 17,
     "bpe_tokenize_stream": 18,
-    "ann_ivfpq_probe_stream": 19,
+    "ann_ivfpq_probe_stream": 20,
     "ingest_gate_stream": 18,
     "range_join_stream": 18,
 }
@@ -1723,46 +1723,21 @@ _ANCHORS = ["clean_coerce", "kpi_daily", "kpi_report_endpoint", "kpi_global"]
 # or oracle) without being never-certified: they re-enter the window
 # right after the never-certified block, regardless of ledger age —
 # a green row from a previous round does not certify this round's code.
-# Round 14: starts empty after the ledger refresh; queries re-enter here
-# as their executed plans change during the round.
+# The list is reset to empty at each ledger refresh (the refreshed
+# ledger already records the round that certified its entries); queries
+# re-enter here as their executed plans change during the round.
 # Window budget: 4 anchors + |never| + touched + forced-stale rows
 # must stay <= 50.
-_TOUCHED_THIS_ROUND: list[str] = [
-    # round-20 (optimization round 2): queries re-enter here as their
-    # EXECUTED PLANS change — results are identical by contract (each
-    # change verified against the DuckDB oracle before landing), but a
-    # green row from a previous round does not certify this round's plan.
-    #
-    # The round's one landed engine change — the AQE SMJ->shuffled-hash
-    # threshold (session.py) — is SCALE-GATED: executed plans at the
-    # certified scales (sf0.001/0.01 oracle gate, sf0.1 bench) are
-    # UNCHANGED (verified by final-plan dumps: sf0.1 relational joins
-    # are all broadcast, hinted corpus SMJs survive the rewrite); the
-    # rewrite fires from the 10x replica upward
-    # (plans/r20/suppliers_blocking_orders_shj10x_{before,after}.txt).
-    # Conservative re-certification entries for the two queries whose
-    # code-adjacent surfaces were touched at all this round:
-    "suppliers_blocking_orders",  # the knob's measured 10x beneficiary
-    "ann_ivfpq_probe_stream",  # frozen-state tuple now carries its prefix (guard only)
-]
+_TOUCHED_THIS_ROUND: list[str] = []
 
-# Round-18 projection (ledger after r17, verified against the
-# CORRECTNESS files: 50@r17 / 38@r16 / 46@r15 / 33@r14 — seventh
-# consecutive round with zero rows-only rows). The 33 r14 rows are due
-# by this window (certified r14, ceiling r14+4=r18) and oldest-fill
-# places all of them. Head budget: 50 - 4 anchors - 33 r14 oldest-fill
-# = 13 slots for round-18 registrations + touched entries — r18 is a
-# re-certification round by design (projected at r17 close).
-#
-# FINAL round-18 head: 4 anchors + 5 never-certified registrations
-# (bpe_tokenize_stream, bpe_fertility_by_source, corpus_build_funnel,
-# ann_ivfpq_probe_stream, ingest_gate_stream) + 1 touched
-# (dedup_survivors — its decision table became the survivor-manifest
-# artifact; certified r14, so it sits inside the forced block either
-# way). Window = 9 head + 33 r14 (incl. the touched row) + 8 r15-fill.
-# Registration CLOSED for the round at 172. r19 projection: 38 r15
-# rows remain (46 - 8 fill), head budget 50 - 4 - 38 = 8 — r19 is
-# ALSO a re-certification round; keep its registrations near zero.
+# Round-21 projection (ledger after r20, verified against the
+# CORRECTNESS files: 50@r20 / 44@r19 / 42@r18 / 36@r17). The 36 r17
+# rows reach the staleness ceiling this round (certified r17, ceiling
+# r17+4=r21) and oldest-fill places all of them; no row is overdue.
+# Window = 4 anchors + 36 r17 + 10 r18-fill, with no never-certified or
+# touched entries. Head budget: 50 - 4 anchors - 36 r17 = 10 slots for
+# round-21 registrations + touched entries; each one displaces an
+# r18-fill row, which stays within the ceiling until r22.
 
 _WINDOW_SIZE = 50
 
