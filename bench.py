@@ -113,6 +113,42 @@ def run_canary(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """One-time session costs paid outside any timed region, so they are
+    not billed to whichever query happens to run first."""
+    from pyspark.sql import functions as F
+
+    from prueba_tecnica_http_client_etl_spark.session import default_parallelism
+
+    # JVM / codegen warmup.
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # Python-worker warmup: the first mapInPandas stage in a session pays
+    # ~2.5s of worker spawn + Arrow init that would otherwise be billed to
+    # whichever Arrow query happens to run first (multimodal_frame_sample,
+    # alphabetically). One worker per core.
+    n_workers = default_parallelism()
+    spark.range(n_workers * 100).repartition(n_workers).mapInPandas(
+        lambda batches: batches, "id long"
+    ).write.format("noop").mode("overwrite").save()
+    # Scan + broadcast warmup: the session's first parquet footer read and
+    # first BroadcastExchange also pay one-time setup.
+    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r.join(F.broadcast(r.select(F.col("r_regionkey").alias("k"))),
+           r.r_regionkey == F.col("k")).write.format("noop").mode("overwrite").save()
+
+
+def barrier(spark) -> None:
+    """Untimed isolation before each timed query: drop the previous
+    query's persisted intermediates (signature/posting tables) so storage
+    memory stays flat and timings do not depend on suite order, stop any
+    stream so none straddles a timer, and absorb straggler tasks / worker
+    teardown with a tiny job."""
+    spark.catalog.clearCache()
+    for q in spark.streams.active:
+        q.stop()
+    spark.range(10_000).selectExpr("count(*)").collect()
+
+
 def build_output_lines(
     timings: dict[str, float],
     reran: dict[str, list[float]],
@@ -183,39 +219,14 @@ def main() -> int:
 
     spark = get_spark(f"bench-sf{sf}")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM / codegen warmup outside the timed region.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # Python-worker warmup, same reason: the first mapInPandas stage in a
-    # session pays ~2.5s of worker spawn + Arrow init that would otherwise
-    # be billed to whichever Arrow query happens to run first
-    # (multimodal_frame_sample, alphabetically). One worker per core.
     n_workers = default_parallelism()
-    spark.range(n_workers * 100).repartition(n_workers).mapInPandas(
-        lambda batches: batches, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # Scan + broadcast warmup: the session's first parquet footer read and
-    # first BroadcastExchange also pay one-time setup otherwise billed to
-    # the alphabetically-first query.
-    from pyspark.sql import functions as _F
 
-    _r = spark.read.parquet(f"{sf_dir}/region.parquet")
-    _r.join(_F.broadcast(_r.select(_F.col("r_regionkey").alias("k"))),
-            _r.r_regionkey == _F.col("k")).write.format("noop").mode("overwrite").save()
-
+    warm_up(spark, sf_dir)
     all_queries = registry.queries()
     ordered = run_order(all_queries)
 
     def run_once(name: str) -> float:
-        # isolate queries: some operators persist() intermediate stages
-        # (signature/posting tables); dropping them between queries keeps
-        # storage memory flat and timings independent of suite order.
-        spark.catalog.clearCache()
-        for q in spark.streams.active:  # defensive: no stream may straddle a timer
-            q.stop()
-        # untimed barrier: absorb any straggler tasks / worker teardown from
-        # the previous query before the next timer starts.
-        spark.range(10_000).selectExpr("count(*)").collect()
+        barrier(spark)
         t0 = time.perf_counter()
         all_queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 3)

@@ -83,3 +83,33 @@ def test_query_matches_oracle(spark, duck, name):
         (i, a, b) for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b
     ]
     assert not mismatches, f"{name}: {len(mismatches)} mismatching rows; first 3: {mismatches[:3]}"
+
+
+def test_queries_are_registration_order_with_oracles():
+    """queries() is the registry table as registered: the four
+    reference-surface queries first, and every query has an oracle."""
+    from prueba_tecnica_http_client_etl_spark import registry
+
+    names = list(registry.queries())
+    assert names == list(registry.QUERIES)
+    assert names[:4] == ["clean_coerce", "kpi_daily", "kpi_report_endpoint", "kpi_global"]
+    assert set(names) == set(registry.oracle_sql())
+
+
+def test_normalize_keeps_wide_ints_exact_and_equates_nan():
+    # 60-bit fingerprints that differ only in the last bit stay apart
+    # (a float cast would merge them), and NaN cells compare equal
+    a, b = 2**59 + 1, 2**59
+    assert float(a) == float(b)
+    assert _normalize([(a,)], ["h"]) != _normalize([(b,)], ["h"])
+    assert _normalize([(float("nan"), 1)], ["x", "n"]) == _normalize([(float("nan"), 1)], ["x", "n"])
+
+
+def test_entry_is_the_flagship_kpi_query(spark):
+    import __spark_entry__ as E
+
+    got_rows, got_cols = _spark_result(spark, lambda s, _: E.entry(s), SF_SMOKE)
+    want_rows, want_cols = _spark_result(spark, E.queries()["kpi_daily"], SF_SMOKE)
+    assert got_rows
+    assert sorted(got_cols) == sorted(want_cols)
+    assert _normalize(got_rows, got_cols) == _normalize(want_rows, want_cols)

@@ -35,22 +35,13 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from prueba_tecnica_http_client_etl_spark.session import default_parallelism, get_spark
+    from bench import barrier, warm_up
+    from prueba_tecnica_http_client_etl_spark.session import get_spark
     from prueba_tecnica_http_client_etl_spark import registry
 
     spark = get_spark("isolate")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warmups as bench.py so shot 1 is comparable
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    n_workers = default_parallelism()
-    spark.range(n_workers * 100).repartition(n_workers).mapInPandas(
-        lambda b: b, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    from pyspark.sql import functions as _F
-
-    _r = spark.read.parquet(f"{sf_dir}/region.parquet")
-    _r.join(_F.broadcast(_r.select(_F.col("r_regionkey").alias("k"))),
-            _r.r_regionkey == _F.col("k")).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)  # same warm-up as bench.py so shot 1 is comparable
 
     all_queries = registry.queries()
     for name in args.queries:
@@ -67,10 +58,7 @@ def main() -> int:
             print(f"explain -> {out}")
         times = []
         for shot in range(args.shots):
-            spark.catalog.clearCache()
-            for q in spark.streams.active:
-                q.stop()
-            spark.range(10_000).selectExpr("count(*)").collect()
+            barrier(spark)
             spark.sparkContext.setJobDescription(f"{name} shot{shot}")
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Driver-mirror oracle verification for a SUBSET of registered queries
-(the .claude/skills/verify recipe, parameterized): compare queries() vs
-oracle_sql() in DuckDB at $SPARK_GRAFT_SF_DIR (default sf0.01).
+"""Driver-mirror oracle verification for a SUBSET of registered queries:
+compare queries() vs oracle_sql() in DuckDB at $SPARK_GRAFT_SF_DIR
+(default sf0.01), with the same order-insensitive comparison as
+tests/test_oracle_parity.py.
 
 Usage: python tools/verify_subset.py QUERY [QUERY...]
 Dev tool only; bench.py stays the only driver artifact.
@@ -27,6 +28,7 @@ def main() -> int:
 
     import __spark_entry__ as E
     from prueba_tecnica_http_client_etl_spark.session import get_spark
+    from tests.test_oracle_parity import _normalize
 
     spark = get_spark("verify-subset")
     spark.sparkContext.setLogLevel("ERROR")
@@ -34,34 +36,17 @@ def main() -> int:
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
-    def norm(rows, cols):
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        out = [
-            tuple(
-                float(r[i])
-                if isinstance(r[i], (int, float)) and not isinstance(r[i], bool)
-                else r[i]
-                for i in order
-            )
-            for r in rows
-        ]
-        out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-        return out
-
     qs, os_ = E.queries(), E.oracle_sql()
     fails = []
     for name in names:
         sdf = qs[name](spark, sf)
         srows = [tuple(r) for r in sdf.collect()]
-        if name not in os_:
-            print(f"{name} rows-only {len(srows)}", flush=True)
-            continue
         rel = con.sql(os_[name])
         drows, dcols = rel.fetchall(), list(rel.columns)
         ok = (
             sorted(sdf.columns) == sorted(dcols)
             and len(srows) == len(drows)
-            and norm(srows, sdf.columns) == norm(drows, dcols)
+            and _normalize(srows, sdf.columns) == _normalize(drows, dcols)
         )
         print(f"{name} {'OK' if ok else 'MISMATCH'} {len(srows)}", flush=True)
         if not ok:
