@@ -11,23 +11,142 @@ the same plans hold on a 1000-executor cluster at 100 TB:
   deterministic date derivation.
 - Arrow enabled: every Python-boundary crossing (pandas UDFs, toPandas)
   is columnar-batched.
+
+JVM start-up: most of a process's 9-11 s before its first query is the
+driver JVM loading classes. get_spark starts that JVM from a dynamic AppCDS
+archive kept once per host, at
+${XDG_CACHE_HOME:-~/.cache}/spark-graft/cds/<key>.jsa. The key covers the
+JDK (real java.home and its release file), the Spark version and the
+launch classpath (every jar under $SPARK_HOME/jars by name, size and
+mtime_ns, plus the conf dir), so a changed install gets a new archive and
+the old one is pruned. The first process with no archive for its key dumps
+one when its JVM exits (140-185 MB, and about 12 s more at exit); an
+atexit hook publishes it with an atomic rename only if the JVM exited 0,
+because a truncated archive crashes every JVM that maps it (SIGBUS), while
+a missing or garbage one only falls back to a plain start. CDS refuses a non-empty
+directory on the classpath, so the launch points SPARK_CONF_DIR at an
+empty directory under the cache root. The JVM starts plainly, with no
+error, when the cache root can't be written, the conf dir holds a real
+file (anything but *.template), a JVM is already running, or the caller's
+own options name -Xshare or an archive. Deleting the cds directory is
+always safe.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import shutil
+import subprocess
+import time
+import uuid
+from dataclasses import dataclass
+from pathlib import Path
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+# JVM log tags silenced with an archive: unsilenced, a dump prints about
+# 1,500 lines to stdout, and a bad archive a warning.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+# Environment variables whose JVM options reach the driver.
+_CALLER_OPTIONS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+_PART_MAX_AGE_S = 3600  # older .part files belong to no running dump
+_DUMP_WAIT_S = 120
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def java_home() -> Path | None:
+    """The JDK spark-class runs: $JAVA_HOME, else the first java on PATH."""
+    if os.environ.get("JAVA_HOME"):
+        return Path(os.environ["JAVA_HOME"]).resolve()
+    java = shutil.which("java")
+    return Path(java).resolve().parent.parent if java else None
+
+
+def archive_key(spark_home: Path, jdk: Path, conf_dir: Path) -> str:
+    h = hashlib.sha256(f"{jdk}\0{pyspark.__version__}\0{conf_dir}\0".encode())
+    release = jdk / "release"
+    h.update(release.read_bytes() if release.is_file() else b"")
+    for jar in sorted((spark_home / "jars").iterdir()):
+        st = jar.stat()
+        h.update(f"\0{jar.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+@dataclass(frozen=True)
+class CdsLaunch:
+    options: str  # spark.driver.defaultJavaOptions
+    conf_dir: Path  # an empty SPARK_CONF_DIR for the launch
+    archive: Path
+    part: Path | None  # the dump target when the archive is missing
+
+
+def cds_launch() -> CdsLaunch | None:
+    """How to start a new driver JVM from the host's class-data archive,
+    or None for a plain start."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None  # a JVM is already running
+    if any(flag in os.environ.get(var, "") for var in _CALLER_OPTIONS for flag in ("-Xshare", "SharedArchive", "ArchiveClasses")):
+        return None
+    jdk = java_home()
+    if jdk is None:
+        return None
+    root = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache") / "spark-graft" / "cds"
+    conf_dir = root / "conf"
+    try:
+        spark_home = Path(_find_spark_home())
+        user_conf = Path(os.environ.get("SPARK_CONF_DIR") or spark_home / "conf")
+        if user_conf.is_dir() and any(not n.endswith(".template") for n in os.listdir(user_conf)):
+            return None
+        conf_dir.mkdir(parents=True, exist_ok=True)
+        if not os.access(root, os.W_OK) or any(conf_dir.iterdir()):
+            return None
+        key = archive_key(spark_home, jdk, conf_dir)
+    except OSError:
+        return None
+    archive = root / f"{key}.jsa"
+    if archive.is_file():
+        return CdsLaunch(f'"-XX:SharedArchiveFile={archive}" {_CDS_QUIET}', conf_dir, archive, None)
+    part = root / f"{key}.{uuid.uuid4().hex}.part"
+    return CdsLaunch(f'"-XX:ArchiveClassesAtExit={part}" {_CDS_QUIET}', conf_dir, archive, part)
+
+
+def publish_archive(proc: subprocess.Popen, part: Path, archive: Path) -> bool:
+    """At exit: let the driver JVM exit and finish its dump, then publish
+    `part` as `archive` only if the JVM exited 0. Anything else deletes
+    `part`. Publishing prunes the archives of other keys and .part files
+    older than an hour."""
+    with contextlib.suppress(OSError):
+        proc.stdin.close()  # EOF on stdin makes the gateway JVM exit
+    try:
+        code = proc.wait(_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        code = proc.wait()
+    if code != 0 or not part.is_file():
+        part.unlink(missing_ok=True)
+        return False
+    os.replace(part, archive)
+    now = time.time()
+    for p in archive.parent.iterdir():
+        with contextlib.suppress(OSError):
+            if (p.suffix == ".jsa" and p != archive) or (p.suffix == ".part" and now - p.stat().st_mtime > _PART_MAX_AGE_S):
+                p.unlink()
+    return True
+
+
 def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     cores = default_parallelism()
     shuffle = shuffle_partitions if shuffle_partitions is not None else max(cores, 8)
-    return (
+    builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
@@ -71,5 +190,25 @@ def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions:
         # pauses (different victim queries each run) at 8g.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        # Off: the [Stage N: ...] bar shares a terminal line with the
+        # result lines of bench.py and tools/.
+        .config("spark.ui.showConsoleProgress", "false")
     )
+    cds = cds_launch()
+    if cds is None:
+        return builder.getOrCreate()
+    # The launcher puts spark.driver.defaultJavaOptions ahead of the
+    # caller's --driver-java-options, so those still apply.
+    builder.config("spark.driver.defaultJavaOptions", cds.options)
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = str(cds.conf_dir)
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if cds.part is not None:
+        atexit.register(publish_archive, SparkContext._gateway.proc, cds.part, cds.archive)
+    return spark

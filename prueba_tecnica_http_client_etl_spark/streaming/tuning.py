@@ -4,9 +4,10 @@ Stateful-streaming cost on a finite replay is dominated by state-store
 machinery, not data volume: every stateful operator keeps one state-store
 instance per shuffle partition (a stream-stream join keeps FOUR — left/
 right rows plus key-to-count indexes), and every micro-batch pays per-store
-open/commit/snapshot bookkeeping. At the session default of 32 shuffle
-partitions the interval join runs 128 store instances to join ~40k replayed
-rows — pure fixed overhead (BENCH_r03: 6.99 s, input-volume-insensitive).
+open/commit/snapshot bookkeeping. At 32 shuffle partitions (the session
+default, max(cores, 8), on a 32-core host) the interval join runs 128 store
+instances to join ~40k replayed rows — pure fixed overhead (BENCH_r03:
+6.99 s, input-volume-insensitive).
 
 Shrinking shuffle partitions for the duration of the stream run bounds that
 fixed cost. Results are partition-count-invariant (state is keyed by the
