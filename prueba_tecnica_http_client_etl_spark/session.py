@@ -20,8 +20,11 @@ JDK (real java.home and its release file), the Spark version and the
 launch classpath (every jar under $SPARK_HOME/jars by name, size and
 mtime_ns, plus the conf dir), so a changed install gets a new archive and
 the old one is pruned. The first process with no archive for its key dumps
-one when its JVM exits (140-185 MB, and about 12 s more at exit); an
-atexit hook publishes it with an atomic rename only if the JVM exited 0,
+one when its JVM exits (140-200 MB, and 12-20 s more at exit). Until then
+its empty <key>.<uuid>.part marks the dump in flight, and other processes
+start plainly rather than dump too; a .part older than an hour belongs to
+a killed process and the next launch deletes it. An
+atexit hook publishes the dump with an atomic rename only if the JVM exited 0,
 because a truncated archive crashes every JVM that maps it (SIGBUS), while
 a missing or garbage one only falls back to a plain start. CDS refuses a non-empty
 directory on the classpath, so the launch points SPARK_CONF_DIR at an
@@ -115,15 +118,36 @@ def cds_launch() -> CdsLaunch | None:
     archive = root / f"{key}.jsa"
     if archive.is_file():
         return CdsLaunch(f'"-XX:SharedArchiveFile={archive}" {_CDS_QUIET}', conf_dir, archive, None)
+    prune(root)
+    if any(root.glob(f"{key}.*.part")):
+        return None  # another process is dumping this key's archive
     part = root / f"{key}.{uuid.uuid4().hex}.part"
+    try:
+        part.touch(exist_ok=False)  # marks the dump in flight; the JVM replaces it
+    except OSError:
+        return None
     return CdsLaunch(f'"-XX:ArchiveClassesAtExit={part}" {_CDS_QUIET}', conf_dir, archive, part)
+
+
+def prune(root: Path, keep: Path | None = None) -> None:
+    """Delete .part files older than an hour, which no running dump owns
+    (a killed process leaves its dump behind), and, when `keep` is given,
+    every other archive."""
+    now = time.time()
+    with contextlib.suppress(OSError):
+        for p in root.iterdir():
+            with contextlib.suppress(OSError):
+                if (p.suffix == ".jsa" and keep is not None and p != keep) or (
+                    p.suffix == ".part" and now - p.stat().st_mtime > _PART_MAX_AGE_S
+                ):
+                    p.unlink()
 
 
 def publish_archive(proc: subprocess.Popen, part: Path, archive: Path) -> bool:
     """At exit: let the driver JVM exit and finish its dump, then publish
-    `part` as `archive` only if the JVM exited 0. Anything else deletes
-    `part`. Publishing prunes the archives of other keys and .part files
-    older than an hour."""
+    `part` as `archive` only if the JVM exited 0 and wrote it. Anything
+    else deletes `part`. Publishing prunes the archives of other keys and
+    stale .part files."""
     with contextlib.suppress(OSError):
         proc.stdin.close()  # EOF on stdin makes the gateway JVM exit
     try:
@@ -131,15 +155,15 @@ def publish_archive(proc: subprocess.Popen, part: Path, archive: Path) -> bool:
     except subprocess.TimeoutExpired:
         proc.kill()
         code = proc.wait()
-    if code != 0 or not part.is_file():
+    try:
+        dumped = code == 0 and part.stat().st_size > 0
+    except OSError:
+        dumped = False
+    if not dumped:
         part.unlink(missing_ok=True)
         return False
     os.replace(part, archive)
-    now = time.time()
-    for p in archive.parent.iterdir():
-        with contextlib.suppress(OSError):
-            if (p.suffix == ".jsa" and p != archive) or (p.suffix == ".part" and now - p.stat().st_mtime > _PART_MAX_AGE_S):
-                p.unlink()
+    prune(archive.parent, keep=archive)
     return True
 
 
@@ -204,6 +228,10 @@ def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions:
     os.environ["SPARK_CONF_DIR"] = str(cds.conf_dir)
     try:
         spark = builder.getOrCreate()
+    except BaseException:
+        if cds.part is not None:
+            cds.part.unlink(missing_ok=True)
+        raise
     finally:
         if saved is None:
             del os.environ["SPARK_CONF_DIR"]

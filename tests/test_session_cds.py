@@ -74,6 +74,8 @@ def test_missing_archive_dumps_and_existing_one_is_used(no_jvm, tmp_path, monkey
     assert dump.part is not None and dump.part.parent == no_jvm
     assert f'"-XX:ArchiveClassesAtExit={dump.part}"' in dump.options
     assert dump.conf_dir.is_dir() and not any(dump.conf_dir.iterdir())
+    assert dump.part.is_file()  # the dump is in flight
+    assert session.cds_launch() is None  # so a second process starts plainly
 
     dump.archive.write_bytes(b"archive")
     use = session.cds_launch()
@@ -94,7 +96,7 @@ def test_real_spark_defaults_gives_plain_start(no_jvm, tmp_path, monkeypatch):
     "case", ["root_not_writable", "jvm_running", "gateway_port", "caller_xshare", "caller_archive"]
 )
 def test_plain_start_cases(no_jvm, tmp_path, monkeypatch, case):
-    assert session.cds_launch() is not None
+    session.cds_launch().part.unlink()  # a dump would start; none is in flight
     if case == "root_not_writable":
         blocker = tmp_path / "file"
         blocker.write_text("")  # a file where the cache directory should go
@@ -110,12 +112,22 @@ def test_plain_start_cases(no_jvm, tmp_path, monkeypatch, case):
     assert session.cds_launch() is None
 
 
-def _dump(root: Path, code: int | None) -> tuple[subprocess.Popen, Path, Path]:
-    """A stand-in JVM that wrote its dump and exits with `code`, or is
+def test_stale_part_is_pruned_and_the_dump_retried(no_jvm):
+    first = session.cds_launch()
+    assert session.cds_launch() is None
+    two_hours_ago = time.time() - 2 * 3600
+    os.utime(first.part, (two_hours_ago, two_hours_ago))  # its process was killed
+    again = session.cds_launch()
+    assert again.part is not None and again.part != first.part
+    assert not first.part.exists()
+
+
+def _dump(root: Path, code: int | None, dump: bytes = b"dump") -> tuple[subprocess.Popen, Path, Path]:
+    """A stand-in JVM that wrote `dump` and exits with `code`, or is
     killed mid-dump when `code` is None."""
     root.mkdir(parents=True, exist_ok=True)
     part, archive = root / "k.123.part", root / "k.jsa"
-    part.write_bytes(b"dump")
+    part.write_bytes(dump)
     if code is None:
         proc = subprocess.Popen(["sleep", "60"], stdin=subprocess.PIPE)
         proc.kill()
@@ -124,9 +136,9 @@ def _dump(root: Path, code: int | None) -> tuple[subprocess.Popen, Path, Path]:
     return proc, part, archive
 
 
-@pytest.mark.parametrize("code", [None, 1, 134])
-def test_failed_or_killed_dump_is_never_published(tmp_path, code):
-    proc, part, archive = _dump(tmp_path, code)
+@pytest.mark.parametrize("code,dump", [(None, b"dump"), (1, b"dump"), (134, b"dump"), (0, b"")])
+def test_failed_killed_or_skipped_dump_is_never_published(tmp_path, code, dump):
+    proc, part, archive = _dump(tmp_path, code, dump)
     assert not session.publish_archive(proc, part, archive)
     assert not archive.exists() and not part.exists()
 
