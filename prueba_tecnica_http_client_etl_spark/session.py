@@ -20,15 +20,17 @@ JDK (real java.home and its release file), the Spark version and the
 launch classpath (every jar under $SPARK_HOME/jars by name, size and
 mtime_ns, plus the conf dir), so a changed install gets a new archive and
 the old one is pruned. The first process with no archive for its key dumps
-one when its JVM exits (140-200 MB, and 12-20 s more at exit). Until then
-its empty <key>.<uuid>.part marks the dump in flight, and other processes
-start plainly rather than dump too; a .part older than an hour belongs to
-a killed process and the next launch deletes it. An
-atexit hook publishes the dump with an atomic rename only if the JVM exited 0,
-because a truncated archive crashes every JVM that maps it (SIGBUS), while
-a missing or garbage one only falls back to a plain start. CDS refuses a non-empty
-directory on the classpath, so the launch points SPARK_CONF_DIR at an
-empty directory under the cache root. The JVM starts plainly, with no
+one when its JVM exits (140-200 MB, and 12-20 s more at exit), and its
+perfbench set-up is 13-19 % slower, so the archive pays back after about
+four processes. While it runs, its empty <key>.<uuid>.part marks the dump
+in flight, and other processes start plainly rather than dump too; a
+.part older than an hour belongs to a killed process and the next launch
+deletes it. An atexit hook publishes the dump with an atomic rename only
+if the JVM exited 0, because a truncated archive crashes every JVM that
+maps it (SIGBUS), while a missing or garbage one only falls back to a
+plain start. CDS refuses a non-empty directory on the classpath, so the
+launch points SPARK_CONF_DIR at an empty directory under the cache root.
+The JVM starts plainly, with no
 error, when the cache root can't be written, the conf dir holds a real
 file (anything but *.template), a JVM is already running, or the caller's
 own options name -Xshare or an archive. Deleting the cds directory is
