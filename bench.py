@@ -78,15 +78,15 @@ def names_digest(names) -> str:
 
 
 def run_order(names) -> list[str]:
-    """Batch queries alphabetical, then the streaming queries. Streams run
-    LAST: their Python state-store workers and file staging contaminate
-    the next timed slot (round-1 bench showed the query scheduled right
-    after sessionize_stream reading 30-50x its fresh-session floor). Every
-    stream's name carries a `_stream` token, not always as the suffix
-    (dedup_stream_ttl)."""
+    """Batch queries alphabetical, then the streaming queries (the
+    registry's spec table, registry.STREAMS). Streams run LAST: their
+    Python state-store workers and file staging contaminate the next
+    timed slot (round-1 bench showed the query scheduled right after
+    sessionize_stream reading 30-50x its fresh-session floor)."""
+    from prueba_tecnica_http_client_etl_spark.registry import STREAMS
+
     names = sorted(names)
-    streams = [n for n in names if "_stream" in n]
-    return [n for n in names if n not in streams] + streams
+    return [n for n in names if n not in STREAMS] + [n for n in names if n in STREAMS]
 
 
 def run_canary(spark) -> float:

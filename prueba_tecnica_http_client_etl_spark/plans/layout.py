@@ -119,10 +119,3 @@ def replace_table_staged(
     writer.saveAsTable(stage)
     spark.sql(f"DROP TABLE `{table}`")
     spark.sql(f"ALTER TABLE `{stage}` RENAME TO `{table}`")
-
-
-def plan_has_shuffle(df: DataFrame) -> bool:
-    """True if the physical plan contains an Exchange (shuffle) node —
-    the assertion primitive for co-location tests."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" in plan

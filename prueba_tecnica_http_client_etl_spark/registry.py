@@ -12,8 +12,10 @@ Conventions that make the driver's order-insensitive value-hash match:
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators import analytics, corpus, curation, dedup, multimodal, similarity, textops
 from .operators import kpi as kpi_ops
@@ -21,6 +23,23 @@ from .operators import report as report_ops
 from .schemas import load_table
 from .sources import synthetic
 from .functions.cleaning import clean_http_log
+from .streaming import ann_probe_stream as APS
+from .streaming import bpe_stream as BPS
+from .streaming import contamination_stream as CS
+from .streaming import dedup_stream as DS
+from .streaming import dsir_stream as DSIR
+from .streaming import edit_probe_stream as EPS
+from .streaming import image_probe_stream as IMG
+from .streaming import index_probe_stream as IPS
+from .streaming import ingest_gate_stream as IGS
+from .streaming import kpi_stream as KS
+from .streaming import lm_stream as LMS
+from .streaming import pii_stream as PS
+from .streaming import quality_stream as QS
+from .streaming import range_join_stream as RJ
+from .streaming import sessionize_stream as SS
+from .streaming import video_probe_stream as VPS
+from .streaming.runner import StreamSpec, ensure_index, replay
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -387,140 +406,6 @@ def q_events_distinct_users_approx(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# Bump when a staging projection changes (columns written to the JSONL
-# replay input) so pre-existing staged dirs are not silently replayed
-# with the old shape (judge round-2 ADVICE item 1).
-# v4: sessionize_stream stages ONE file (single-batch certified replay).
-STAGING_VERSION = 4
-
-
-def _stream_staging_path(sf_dir: str, kind: str, source_table: str) -> tuple[str, str]:
-    """Fixed staging dir + memory-sink name keyed by
-    (sf_dir, kind, source parquet mtime, STAGING_VERSION).
-
-    The streaming queries replay a table as a JSONL file stream. A fresh
-    tempfile.mkdtemp per invocation leaked disk across bench/correctness
-    runs (judge round 1); a fixed path keyed by the input is written
-    once (Spark's _SUCCESS marker gates reuse) and bounded forever after.
-    The key folds in the source parquet's mtime and a staging version:
-    regenerating the dataset at the same path, or changing the staged
-    projection, changes the key instead of silently replaying stale
-    JSONL (judge round-2 ADVICE item 1). The fixed table name likewise
-    replaces the prior uuid-per-call temp views, so repeated runs in one
-    session overwrite instead of accumulate.
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(os.path.realpath(sf_dir), f"{source_table}.parquet")
-    mtime = os.stat(src).st_mtime_ns if os.path.exists(src) else 0
-    key = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}:{mtime}:v{STAGING_VERSION}".encode()
-    ).hexdigest()[:12]
-    # the sf identity is VISIBLE in the tag (not only hashed into the key)
-    # so _ensure_staged's stale-sibling cleanup is scoped per (kind, sf) —
-    # hashing it invisibly made the other scale factor's live staging
-    # indistinguishable from a stale key. Sanitized: the tag doubles as a
-    # memory-sink table name, where '.' would read as a db qualifier.
-    sfp = os.path.basename(os.path.realpath(sf_dir)).replace(".", "p")
-    tag = f"{kind}_{sfp}_{key}"
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_stream_staging", tag)
-    return path, tag
-
-
-# A superseded staging dir younger than this is left alone: a sibling key
-# that fresh can belong to a CONCURRENT session (dataset regenerated between
-# two live runs) whose file stream is still reading it — deleting it would
-# fail that run mid-replay (judge round-3 ADVICE item 1).
-_STAGING_STALE_AFTER_S = 3600
-# a stream run dir with no _DONE marker may belong to a LIVE concurrent
-# session (its mtime never refreshes while the query runs — checkpoint
-# writes land below ckpt/): such dirs are only swept after a day, which
-# still bounds disk against crashed runs that never wrote the marker
-_ORPHAN_RUN_STALE_AFTER_S = 24 * 3600
-_RUN_DONE_MARKER = "_DONE"
-
-
-def _finish_stream_run(out_root: str) -> None:
-    """Mark a stream run dir (the parent of its out/ root) finished so
-    the sibling sweep may reclaim it at the normal staleness threshold;
-    called after the availableNow replay has terminated."""
-    import os
-
-    try:
-        with open(os.path.join(os.path.dirname(out_root), _RUN_DONE_MARKER), "w"):
-            pass
-    except OSError:
-        pass  # marker is an optimization; the orphan threshold still bounds disk
-
-
-def _ensure_staged(path: str, write_fn) -> None:
-    """Write-once staging with crash-safe publication and age-guarded
-    sibling cleanup.
-
-    Publication: the table is written to a `.tmp.<pid>` sibling and
-    os.rename()d into place — atomic on one filesystem — so a partially
-    staged dir is never visible at the final path (a crash mid-write
-    previously left a dir without _SUCCESS that blocked nothing but
-    wasted disk; a concurrent reader could also glimpse it). If another
-    process won the rename race, its complete copy is kept.
-
-    Cleanup: when this kind's key changes (dataset regenerated,
-    STAGING_VERSION bumped), old-key dirs for the SAME kind are deleted —
-    bounded disk — but only when older than _STAGING_STALE_AFTER_S, so a
-    concurrent session still replaying its (older-key) staging is not
-    pulled out from under an active file stream."""
-    import os
-    import shutil
-    import time
-
-    parent, tag = os.path.split(path)
-    kind = tag.rsplit("_", 1)[0]  # e.g. dedup_stream_in_sf0p01
-    now = time.time()
-    if os.path.isdir(parent):
-        for sib in os.listdir(parent):
-            sib_kind = sib.rsplit("_", 1)[0]
-            # stale = same (kind, sf) under a superseded key, a legacy
-            # pre-sf-tag dir (its kind is a strict prefix of ours), or an
-            # orphaned .tmp.<pid> left by a crashed writer
-            orphan_tmp = sib.startswith(kind + "_") and ".tmp." in sib
-            if sib == tag or not (sib_kind == kind or kind.startswith(sib_kind + "_") or orphan_tmp):
-                continue
-            sib_path = os.path.join(parent, sib)
-            try:
-                age = now - os.path.getmtime(sib_path)
-            except OSError:
-                continue
-            if age >= _STAGING_STALE_AFTER_S:
-                shutil.rmtree(sib_path, ignore_errors=True)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return
-    tmp = f"{path}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # Rename blocked by an existing dir at the final path. Only keep
-        # the incumbent if it is COMPLETE (_SUCCESS present — a concurrent
-        # process won the publication race). A partial dir without
-        # _SUCCESS (crashed writer under the pre-atomic-publish code, or
-        # committer marker disabled) would otherwise survive forever and
-        # replay incomplete data on every run (judge round-4 ADVICE item
-        # 1) — evict it and retry once.
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            shutil.rmtree(path, ignore_errors=True)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # a concurrent process republished between evict and
-                # retry: theirs is complete (it just renamed), keep it
-                shutil.rmtree(tmp, ignore_errors=True)
-
-
 @register(
     "customer_value_deciles_approx",
     analytics.SQL_CUSTOMER_VALUE_DECILES_APPROX,
@@ -533,39 +418,156 @@ def q_customer_value_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFra
     return analytics.customer_value_deciles_approx(spark, sf_dir)
 
 
-@register(
+# --- Structured Streaming replays: one spec row per stream ------------------
+# Every row replays through streaming/runner.replay: stage the source
+# projection as JSONL, build the frozen state, drain the stream module's
+# runner, read back the certified columns. The comment above each row
+# says why its replay certifies against the oracle it carries.
+
+STREAMS: dict[str, StreamSpec] = {}
+
+
+def _stream(name: str, oracle: str, spec: StreamSpec) -> None:
+    STREAMS[name] = spec
+    register(name, oracle)(partial(replay, spec=spec))
+
+
+def _doc_text(docs: DataFrame) -> DataFrame:
+    return docs.select("doc_id", "text")
+
+
+def _probe_arrivals(docs: DataFrame) -> DataFrame:
+    """The image/audio/video arrival set: whole families (base % 5 == 0 —
+    no index side, the novel branch) plus singleton strides whose
+    families stay indexed (the exact/near branches)."""
+    return docs.filter(F.expr(multimodal.SPARK_PH_PROBE_COND)).select("doc_id")
+
+
+def _lsh_corpus_index(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """The persisted LSH index over dedup_incremental's corpus side, in
+    bucketed catalog tables named by the staging tag, so a rewritten
+    dataset rebuilds instead of silently probing stale state."""
+    from .plans.lsh_index import build_lsh_index
+
+    return ensure_index(
+        spark,
+        prefix,
+        ("digests", "bands", "shingles"),
+        lambda p: build_lsh_index(
+            dedup.docs_normalized(spark, sf_dir).filter(F.col("doc_id") % dedup.INCREMENTAL_STRIDE != 0),
+            prefix=p,
+        ),
+    )
+
+
+def _phash_index(sigs: Callable[[SparkSession, str], DataFrame]):
+    """Frozen banded signature index: the trained signatures minus the
+    arrival set."""
+    return lambda spark, sf_dir, tag: {
+        "index_bands": multimodal._phash_bands(
+            sigs(spark, sf_dir).filter(~F.expr(multimodal.SPARK_PH_PROBE_COND))
+        )
+    }
+
+
+def _video_index(spark: SparkSession, sf_dir: str, tag: str) -> dict:
+    # eagerly checkpointed before the stream starts, so per-batch probes
+    # read pinned blocks and never re-derive the distinct
+    fhd = (
+        multimodal._video_fhd(spark, sf_dir)
+        .filter(~F.expr(multimodal.SPARK_PH_PROBE_COND))
+        .localCheckpoint(eager=True)
+    )
+    sizes = fhd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return {"index_fhd": fhd, "index_sizes": sizes}
+
+
+def _ann_index(spark: SparkSession, sf_dir: str, tag: str) -> dict:
+    from .functions import cachepool
+    from .plans import pq_index
+
+    def build(prefix: str) -> None:
+        emb = cachepool.managed_persist(similarity._quantized(spark, sf_dir))
+        # the SAME trained quantizer the batch IVF-PQ tiers serve — a
+        # store hit when any ann_* query trained it first (bench runs
+        # streams last), one shared train otherwise
+        pq_index.build_pq_index(emb, prefix=prefix, cents=similarity._coarse_centroids(spark, sf_dir, emb))
+
+    return {"prefix": ensure_index(spark, f"annpqix_{tag}", pq_index._TABLES, build)}
+
+
+def _dsir_state(spark: SparkSession, sf_dir: str, tag: str) -> dict:
+    # the model is a snapshot-keyed trained artifact (checkpointed —
+    # every micro-batch joins pinned blocks); totals derive from it
+    model = corpus.dsir_model(spark, sf_dir)
+    return {"model": model, "totals": corpus.dsir_totals(model)}
+
+
+def _ttl_delay(spark: SparkSession, sf_dir: str, tag: str) -> dict:
+    max_id = load_table(spark, sf_dir, "documents").selectExpr("max(doc_id)").first()[0]
+    if max_id is None:  # an empty/misstaged snapshot: int(None) would
+        # raise a bare TypeError two frames deep
+        raise ValueError(
+            f"dedup_stream_ttl: documents table at {sf_dir} is empty — "
+            "cannot derive the no-eviction TTL delay from max(doc_id)"
+        )
+    return {"delay": f"{int(max_id) + 2 * 86400} seconds"}
+
+
+def _ingest_gate_state(spark: SparkSession, sf_dir: str, tag: str) -> dict:
+    prefix = _lsh_corpus_index(spark, sf_dir, f"ingateix_{tag}")
+    bf_row, probes, m_log2 = curation.bloom_trained_state(spark, sf_dir)
+    return {
+        "index_prefix": prefix,
+        "bf_row": bf_row,
+        # eager checkpoint: the stream drains the cachepool per batch, and
+        # a drained lazy probe relation would re-derive its corpus scan
+        # every micro-batch; checkpointed blocks are drain-proof
+        "probes": probes.localCheckpoint(eager=True),
+        "m_log2": m_log2,
+        "merges": corpus.bpe_merge_list(spark, sf_dir),
+    }
+
+
+# The KPI pipeline as Structured Streaming (SURVEY §7 step 7): dirty log
+# -> JSONL files -> event-time 1-day windows + watermark -> A1-A8 with
+# approx p90. Finite input driven to completion with availableNow.
+# Oracle (round 6): the finite replay's exact columns are byte-equal to
+# the batch kpi_daily (integer partial sums + cents fixed-point avg are
+# mergeable across micro-batches, asserted by tests/test_streaming.py),
+# so the batch oracle SQL certifies them; the sketch p90 column is
+# projected out of the certified surface (its VALUE is engine-specific;
+# the batch tier kpi_daily_approx_p90 certifies the sketch's rank-error
+# CONTRACT instead — the stream does not pay that per-micro-batch rank
+# join).
+_stream(
     "kpi_daily_stream",
     _LOG_CTES + kpi_ops.sql_kpi_daily_select(include_p90=False),
+    StreamSpec(
+        kind="kpi_stream_in",
+        source="events",
+        stage=synthetic.http_log_from_events,
+        coalesce=True,
+        run=KS.run_to_memory,
+        memory_sink=True,
+        columns=(
+            "date_utc",
+            "endpoint_base",
+            "requests_total",
+            "success_2xx",
+            "client_4xx",
+            "server_5xx",
+            "parse_errors",
+            "avg_elapsed_ms",
+        ),
+    ),
 )
-def q_kpi_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KPI pipeline as Structured Streaming (SURVEY §7 step 7):
-    dirty log -> JSONL files -> event-time 1-day windows + watermark ->
-    A1-A8 with approx p90. Finite input driven to completion with
-    availableNow. Oracle (round 6): the finite replay's exact columns are
-    byte-equal to the batch kpi_daily (integer partial sums + cents
-    fixed-point avg are mergeable across micro-batches, asserted by
-    tests/test_streaming.py), so the batch oracle SQL certifies them; the
-    sketch p90 column is projected out of the certified surface (its
-    VALUE is engine-specific; the batch tier kpi_daily_approx_p90
-    certifies the sketch's rank-error CONTRACT instead — the stream does
-    not pay that per-micro-batch rank join)."""
-    from .streaming import kpi_stream as KS
-
-    tmp, tag = _stream_staging_path(sf_dir, "kpi_stream_in", "events")
-    _ensure_staged(
-        tmp,
-        lambda p: synthetic.http_log_from_events(load_table(spark, sf_dir, "events"))
-        .coalesce(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    return KS.run_to_memory(spark, tmp, table_name=tag).drop("p90_elapsed_ms")
 
 
 def _sql_sessionize_stream_oracle() -> str:
     """Batch sessionization minus each user's LAST session, 0-based seq —
     exactly the closed-session set a finite single-batch replay emits
-    (see q_sessionize_stream)."""
+    (see the sessionize_stream row)."""
     from .functions.portable import sql_roundn
     from .operators.analytics import SESSION_GAP_MIN
 
@@ -594,792 +596,448 @@ WHERE a.session_seq < mx.mseq
 ORDER BY a.user_id, session_seq"""
 
 
-@register("sessionize_stream", _sql_sessionize_stream_oracle())
-def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    gap sessionization of the events table replayed as a file stream.
-
-    Oracle (round 7): the replay is staged as ONE file, so availableNow
-    processes it in a single micro-batch; the handler sorts the batch by
-    event time and closes sessions data-driven (a later-than-gap event
-    closes its predecessor), leaving exactly each user's LAST session
-    open in state. The emitted set is therefore deterministic — the
-    batch sessionization minus each user's final session — and the
-    driver check upgrades from rows-only to rows+schema+hash on the
-    deterministic columns (the stream's raw float total_value is summed
-    in arrival order, so it is projected out of the certified surface,
-    like the sketch p90 in kpi_daily_stream; duration re-rounds with the
-    batch operator's portable roundn). CROSS-batch state transitions
-    stay exercised by tests/test_sessionize_stream.py, which replays one
-    file per trigger."""
-    from pyspark.sql import functions as F
-
-    from .functions.portable import roundn
-    from .streaming import sessionize_stream as SS
-
-    tmp, tag = _stream_staging_path(sf_dir, "sess_stream_in", "events")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "events")
-        .select("user_id", F.col("ts").cast("double").alias("ts_s"), "value")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    return (
-        SS.run_files_to_memory(spark, tmp, table_name=tag, one_file_per_batch=False)
-        .select(
-            "user_id",
-            "session_seq",
-            "n_events",
-            roundn(F.col("duration_s"), 3).alias("duration_s"),
-        )
-        .orderBy("user_id", "session_seq")
-    )
+# Custom stateful streaming operator (applyInPandasWithState): gap
+# sessionization of the events table replayed as a file stream.
+# Oracle (round 7): the replay is staged as ONE file, so availableNow
+# processes it in a single micro-batch; the handler sorts the batch by
+# event time and closes sessions data-driven (a later-than-gap event
+# closes its predecessor), leaving exactly each user's LAST session open
+# in state. The emitted set is therefore deterministic — the batch
+# sessionization minus each user's final session — and the driver check
+# upgrades from rows-only to rows+schema+hash on the deterministic
+# columns (the stream's raw float total_value is summed in arrival
+# order, so it is projected out of the certified surface, like the
+# sketch p90 in kpi_daily_stream; duration re-rounds with the batch
+# operator's portable roundn). CROSS-batch state transitions stay
+# exercised by tests/test_sessionize_stream.py, which replays one file
+# per trigger.
+_stream(
+    "sessionize_stream",
+    _sql_sessionize_stream_oracle(),
+    StreamSpec(
+        kind="sess_stream_in",
+        source="events",
+        stage=lambda events: events.select("user_id", F.col("ts").cast("double").alias("ts_s"), "value"),
+        files=1,
+        coalesce=True,
+        run=partial(SS.run_files_to_memory, one_file_per_batch=False),
+        memory_sink=True,
+        columns=("user_id", "session_seq", "n_events", "duration_s"),
+        rounded=("duration_s",),
+        order=("user_id", "session_seq"),
+    ),
+)
 
 
-@register(
+_SQL_DIGEST_SET = f"""
+WITH {dedup.DUCK_DOCS_CTE}
+SELECT DISTINCT md5(norm) AS norm_md5
+FROM sh_t
+ORDER BY norm_md5"""
+
+# Streaming exact dedup (dropDuplicates state store): the documents
+# table replayed as a multi-batch file stream, one output row per
+# distinct normalized-text digest (first occurrence wins). Oracle (round
+# 6): WHICH doc_id survives depends on batch order (a streaming-only
+# notion — tests/test_dedup_stream.py asserts the cross-batch
+# suppression semantics), but the surviving DIGEST SET is deterministic
+# and equals the batch dedup_exact group keys, so the certified
+# projection is the digest column and the driver check upgrades from
+# rows-only to rows+schema+hash.
+_stream(
     "dedup_stream",
-    f"""
-WITH {dedup.DUCK_DOCS_CTE}
-SELECT DISTINCT md5(norm) AS norm_md5
-FROM sh_t
-ORDER BY norm_md5""",
+    _SQL_DIGEST_SET,
+    StreamSpec(
+        kind="dedup_stream_in",
+        source="documents",
+        stage=_doc_text,
+        run=DS.run_files_to_memory,
+        memory_sink=True,
+        columns=("norm_md5",),
+    ),
 )
-def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup (dropDuplicates state store): the documents
-    table replayed as a multi-batch file stream, one output row per
-    distinct normalized-text digest (first occurrence wins). Oracle
-    (round 6): WHICH doc_id survives depends on batch order (a
-    streaming-only notion — tests/test_dedup_stream.py asserts the
-    cross-batch suppression semantics), but the surviving DIGEST SET is
-    deterministic and equals the batch dedup_exact group keys, so the
-    certified projection is the digest column and the driver check
-    upgrades from rows-only to rows+schema+hash."""
-    from .streaming import dedup_stream as DS
 
-    tmp, tag = _stream_staging_path(sf_dir, "dedup_stream_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    return DS.run_files_to_memory(spark, tmp, table_name=tag).select("norm_md5")
-
-
-@register(
+# BOUNDED-STATE streaming dedup (dropDuplicatesWithinWatermark): the
+# 100 TB retention answer to dedup_stream's exact-global state store —
+# digests are held only within the event-time dedup horizon, so state is
+# O(|digests in window|) regardless of how long the stream has run
+# (tests/test_dedup_stream.py measures the eviction via
+# stateOperators.numRowsTotal). For the certified replay the delay
+# DERIVES FROM THE DATA (a fixed constant merely assumed the span stayed
+# under it): event times are synthesized as doc_id + 86400 seconds, so a
+# delay of max(doc_id) + 2*86400 seconds exceeds the replay's event-time
+# span for ANY corpus snapshot by construction — nothing is evicted and
+# the emitted digest set deterministically equals the batch dedup_exact
+# group keys — the same certified projection and oracle as dedup_stream;
+# which doc_id survives stays a batch-order streaming-only notion. (The
+# no-eviction precondition is thereby checked, not assumed; the
+# bounded-state behavior under a SHORT horizon is what
+# tests/test_dedup_stream.py exercises.)
+_stream(
     "dedup_stream_ttl",
-    f"""
-WITH {dedup.DUCK_DOCS_CTE}
-SELECT DISTINCT md5(norm) AS norm_md5
-FROM sh_t
-ORDER BY norm_md5""",
+    _SQL_DIGEST_SET,
+    StreamSpec(
+        kind="dedup_ttl_in",
+        source="documents",
+        stage=_doc_text,
+        frozen=_ttl_delay,
+        run=lambda spark, path, **kw: DS.run_files_to_memory_ttl(spark, path, **kw)[0],
+        memory_sink=True,
+        columns=("norm_md5",),
+    ),
 )
-def q_dedup_stream_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOUNDED-STATE streaming dedup (dropDuplicatesWithinWatermark):
-    the 100 TB retention answer to dedup_stream's exact-global state
-    store — digests are held only within the event-time dedup horizon,
-    so state is O(|digests in window|) regardless of how long the
-    stream has run (tests/test_dedup_stream.py measures the eviction
-    via stateOperators.numRowsTotal). For the certified replay the
-    delay DERIVES FROM THE DATA (round-11 ADVICE: a fixed constant
-    merely assumed the span stayed under it): event times are
-    synthesized as doc_id + 86400 seconds, so a delay of
-    max(doc_id) + 2*86400 seconds exceeds the replay's event-time span
-    for ANY corpus snapshot by construction — nothing is evicted and
-    the emitted digest set deterministically equals the batch
-    dedup_exact group keys — the same certified projection and oracle
-    as dedup_stream; which doc_id survives stays a batch-order
-    streaming-only notion. (The no-eviction precondition is thereby
-    checked, not assumed; the bounded-state behavior under a SHORT
-    horizon is what tests/test_dedup_stream.py exercises.)"""
-    from .streaming import dedup_stream as DS
 
-    tmp, tag = _stream_staging_path(sf_dir, "dedup_ttl_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    max_id = load_table(spark, sf_dir, "documents").selectExpr("max(doc_id)").first()[0]
-    if max_id is None:  # round-12 ADVICE: empty/misstaged snapshot —
-        # int(None) would raise a bare TypeError two frames deep
-        raise ValueError(
-            f"dedup_stream_ttl: documents table at {sf_dir} is empty — "
-            "cannot derive the no-eviction TTL delay from max(doc_id)"
-        )
-    out, _ = DS.run_files_to_memory_ttl(
-        spark, tmp, table_name=tag, delay=f"{int(max_id) + 2 * 86400} seconds"
-    )
-    return out.select("norm_md5")
-
-
-def _stream_run_dirs(sf_dir: str, kind: str) -> tuple[str, str]:
-    """(output, checkpoint) dirs for a streaming query run: a UNIQUE
-    per-invocation subdir under a root keyed by (kind, realpath-hash of
-    sf) — unlike the input staging these cannot be REUSED across runs (a
-    finite availableNow replay resuming an old checkpoint sees no new
-    data and emits nothing), and unlike a shared cleared-in-place dir a
-    unique subdir cannot yank a CONCURRENT session's live checkpoint out
-    from under it (round-7 review finding — the same concurrent-session
-    hazard the staging cleanup's age guard exists for). Disk stays
-    bounded by the sibling sweep, which is LIVENESS-AWARE (round-8
-    ADVICE): a finished run writes a _DONE marker (_finish_stream_run)
-    and is swept once older than _STAGING_STALE_AFTER_S; a marker-less
-    sibling may be a CONCURRENT session's live run — checkpoint writes
-    touch paths below ckpt/, so the run dir's own mtime never refreshes,
-    and an age test alone would sweep a live checkpoint whose query
-    outlives the threshold — so it is only swept at the much larger
-    _ORPHAN_RUN_STALE_AFTER_S (covering crashed runs that never
-    marked)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
-    sfp = os.path.basename(os.path.realpath(sf_dir)).replace(".", "p")
-    key = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stream_runs", f"{kind}_{sfp}_{key}"
-    )
-    now = time.time()
-    if os.path.isdir(root):
-        for sib in os.listdir(root):
-            sib_path = os.path.join(root, sib)
-            try:
-                age = now - os.path.getmtime(sib_path)
-            except OSError:
-                continue
-            finished = os.path.exists(os.path.join(sib_path, _RUN_DONE_MARKER))
-            threshold = _STAGING_STALE_AFTER_S if finished else _ORPHAN_RUN_STALE_AFTER_S
-            if age >= threshold:
-                shutil.rmtree(sib_path, ignore_errors=True)
-    run = os.path.join(root, uuid.uuid4().hex[:12])
-    out_root = os.path.join(run, "out")
-    checkpoint = os.path.join(run, "ckpt")
-    os.makedirs(out_root, exist_ok=True)
-    os.makedirs(checkpoint, exist_ok=True)
-    return out_root, checkpoint
-
-
-@register("quality_gate_stream", curation.SQL_QUALITY_GATE)
-def q_quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming quality gate with foreachBatch quarantine multi-sink
-    (streaming/quality_stream.py): the documents table replayed as a file
-    stream, each micro-batch scored with the batch gate's rules and split
-    into kept/quarantine layers with idempotent per-batch overwrite.
-    Oracle (round 6): with the streaming-only batch_id column dropped,
-    the per-doc decisions are byte-equal to the batch quality_gate
-    (asserted by tests/test_quality_stream.py), so the batch gate's
-    oracle SQL certifies the stream's full output."""
-    from .streaming import quality_stream as QS
-
-    tmp, tag = _stream_staging_path(sf_dir, "quality_stream_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "source")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "quality_stream")
-    out = QS.run_quality_quarantine(spark, tmp, out_root, checkpoint=checkpoint).drop(
-        "batch_id"
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dedup_index_probe_stream", dedup.SQL_DEDUP_INCREMENTAL)
-def q_dedup_index_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming probe of the PERSISTED LSH dedup index — the production
-    crawler-ingest loop (streaming/index_probe_stream.py): the index side
-    of dedup_incremental's corpus is built once into bucketed catalog
-    tables (keyed by the same mtime/version key as the stream staging, so
-    a regenerated dataset rebuilds instead of silently probing stale
-    state), and the incoming side replays as a file stream whose every
-    micro-batch is probed via plans/lsh_index.probe_lsh_index.
-
-    Oracle: verdicts reference only the index, never other in-flight
-    docs, so the union over micro-batches equals probing the whole
-    incoming set at once — which is exactly dedup_incremental. Its
-    batch oracle SQL therefore certifies the stream's full output
-    (rows+schema+hash), the strongest check a stream can carry."""
-    from pyspark.sql import functions as F
-
-    from .operators.dedup import INCREMENTAL_STRIDE, docs_normalized
-    from .plans.lsh_index import build_lsh_index
-    from .streaming import index_probe_stream as IPS
-
-    tmp, tag = _stream_staging_path(sf_dir, "index_probe_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % INCREMENTAL_STRIDE == 0)
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    ix_prefix = f"probeix_{tag}"
-    # rebuild unless ALL THREE index tables exist (judge round-6 ADVICE
-    # item 1): a crash between build_lsh_index's three writes can leave
-    # digests present with bands/shingles missing — gating on digests
-    # alone would then skip the rebuild forever and fail every probe on
-    # the missing table. saveAsTable(overwrite) makes the partial-state
-    # rebuild safe.
-    if not all(
-        spark.catalog.tableExists(f"`default`.`{ix_prefix}_{s}`")
-        for s in ("digests", "bands", "shingles")
-    ):
-        build_lsh_index(
-            docs_normalized(spark, sf_dir).filter(F.col("doc_id") % INCREMENTAL_STRIDE != 0),
-            prefix=ix_prefix,
-        )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "index_probe")
-    out = (
-        IPS.run_index_probe(
-            spark, tmp, out_root, index_prefix=ix_prefix, checkpoint=checkpoint
-        )
-        .select("doc_id", "verdict", "n_near_candidates")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("lm_score_stream", corpus.SQL_LM_BIGRAM_SCORE)
-def q_lm_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming bigram-LM quality gate (streaming/lm_stream.py): the
-    model is trained once from the batch-side train slice
-    (corpus.lm_train_model — the same frames the batch filter uses),
-    the held slice replays as a file stream, and every micro-batch is
-    scored through corpus.lm_score_docs verbatim.
-
-    Oracle: scores reference only the frozen model, never other
-    in-flight docs, so the union over micro-batches equals scoring the
-    whole held set at once — which is exactly lm_bigram_score. Its
-    batch oracle SQL certifies the stream's full output
-    (rows+schema+hash), the strongest check a stream can carry; only
-    emission timing is a streaming-only notion."""
-    from pyspark.sql import functions as F
-
-    from .operators.corpus import LM_HELD_STRIDE, lm_trained_model
-    from .streaming import lm_stream as LMS
-
-    tmp, tag = _stream_staging_path(sf_dir, "lm_score_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % LM_HELD_STRIDE == 0)
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    # the model frames are snapshot-keyed trained artifacts
-    # (checkpointed — every micro-batch joins pinned blocks)
-    c12, c1, vocab = lm_trained_model(spark, sf_dir)
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "lm_score")
-    out = (
-        LMS.run_lm_score(
-            spark, tmp, out_root, c12=c12, c1=c1, vocab=vocab, checkpoint=checkpoint
-        )
-        .select("doc_id", "n_bigrams", "n_oov_bigrams", "avg_bits")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dsir_score_stream", corpus.SQL_DSIR_IMPORTANCE)
-def q_dsir_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DSIR importance gate (streaming/dsir_stream.py): the
-    B-row hashed-n-gram importance model is the snapshot-keyed trained
-    artifact (corpus.dsir_model — the same frame the batch selector
-    reads), the raw (non-target) slice replays as a file stream, and
-    every micro-batch is scored through corpus.dsir_score_docs
-    verbatim.
-
-    Oracle: weights reference only the frozen model, never other
-    in-flight docs, so the union over micro-batches equals scoring the
-    whole raw slice at once — which is exactly dsir_importance. Its
-    batch oracle SQL certifies the stream's full output
-    (rows+schema+hash); only emission timing is a streaming-only
-    notion."""
-    from pyspark.sql import functions as F
-
-    from .operators.corpus import DSIR_TARGET_SOURCES, dsir_model, dsir_totals
-    from .streaming import dsir_stream as DS
-
-    tmp, tag = _stream_staging_path(sf_dir, "dsir_score_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(~F.col("source").isin(*DSIR_TARGET_SOURCES))
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    # the model is a snapshot-keyed trained artifact (checkpointed —
-    # every micro-batch joins pinned blocks); totals derive from it
-    model = dsir_model(spark, sf_dir)
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "dsir_score")
-    out = (
-        DS.run_dsir_score(
-            spark, tmp, out_root, model=model, totals=dsir_totals(model), checkpoint=checkpoint
-        )
-        .select("doc_id", "n_feat", "log2_w", "avg_bits")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dsir_sample_stream", corpus.SQL_DSIR_SAMPLE)
-def q_dsir_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DSIR SELECTION gate (streaming/dsir_stream.py) — the
-    eleventh hash-certified stream, closing the score -> plan -> sample
-    loop in the ingest path: the B-row model and the per-snapshot
-    acceptance plan are snapshot-keyed trained artifacts (corpus.
-    dsir_model / dsir_accept_plan — the same frames the batch selector
-    reads), the raw slice replays as a file stream, and every
-    micro-batch is scored AND filtered through corpus.dsir_select_docs
-    verbatim.
-
-    Oracle: weight and keep/drop are per-doc pure functions of frozen
-    state, so the union over micro-batches equals batch dsir_sample —
-    its oracle SQL certifies the stream's full output
-    (rows+schema+hash); only emission timing is a streaming-only
-    notion."""
-    from pyspark.sql import functions as F
-
-    from .operators.corpus import (
-        DSIR_TARGET_SOURCES,
-        dsir_accept_plan,
-        dsir_model,
-        dsir_totals,
-    )
-    from .streaming import dsir_stream as DS
-
-    tmp, tag = _stream_staging_path(sf_dir, "dsir_score_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(~F.col("source").isin(*DSIR_TARGET_SOURCES))
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    model = dsir_model(spark, sf_dir)
-    plan = dsir_accept_plan(spark, sf_dir)
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "dsir_sample")
-    out = (
-        DS.run_dsir_sample(
-            spark,
-            tmp,
-            out_root,
-            model=model,
-            totals=dsir_totals(model),
-            plan=plan,
-            checkpoint=checkpoint,
-        )
-        .select("doc_id", "log2_w", "accept_num")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("contamination_bloom_stream", curation.SQL_CONTAMINATION_CHECK)
-def q_contamination_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Bloom-prescreened decontamination
-    (streaming/contamination_stream.py): the probe-set bitmap + exact
-    probe-gram relation are frozen once per snapshot
-    (curation.bloom_trained_state — the auto-sized geometry-keyed
-    trained artifact the batch operator shares), the corpus slice
-    replays as a file stream, and every micro-batch runs
-    curation.bloom_score_docs verbatim: grams die against the broadcast
-    bitmap map-side, survivors verify against the exact probe relation.
-
-    Oracle: per-doc contamination references only the frozen probe set,
-    never other in-flight docs, so the union over micro-batches equals
-    checking the whole corpus slice at once — which (prescreen being
-    lossless) is exactly contamination_check. Its batch oracle SQL
-    certifies the stream's full output (rows+schema+hash), the
-    strongest check a stream can carry — the ninth hash-certified
-    stream."""
-    from pyspark.sql import functions as F
-
-    from .operators.curation import PROBE_STRIDE, bloom_trained_state
-    from .streaming import contamination_stream as CS
-
-    tmp, tag = _stream_staging_path(sf_dir, "contamination_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % PROBE_STRIDE != 0)
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    bf_row, probes, m_log2 = bloom_trained_state(spark, sf_dir)
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "contamination")
-    out = (
-        CS.run_contamination(
-            spark, tmp, out_root, bf_row=bf_row, probes=probes, m_log2=m_log2, checkpoint=checkpoint
-        )
-        .select("doc_id", "n_grams", "n_overlap", "contamination")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("pii_scrub_stream", curation.SQL_PII_SCRUB)
-def q_pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PII scrub (streaming/pii_stream.py): the corpus
-    replays as a file stream and every micro-batch is counted and
-    redacted through curation.scrub_pii_docs verbatim — the
-    scrub-at-the-edge position a production privacy gate holds, so
-    dirty bytes never land downstream.
-
-    Oracle: counts and redaction are per-document pure functions (no
-    trained state, no cross-doc reference), so the union over
-    micro-batches equals scrubbing the whole corpus at once — which is
-    exactly pii_scrub. Its batch oracle SQL certifies the stream's
-    full output (rows+schema+hash), the strongest check a stream can
-    carry — the twelfth hash-certified stream."""
-    from .streaming import pii_stream as PS
-
-    tmp, tag = _stream_staging_path(sf_dir, "pii_scrub_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "pii_scrub")
-    out = (
-        PS.run_pii_scrub(spark, tmp, out_root, checkpoint=checkpoint)
-        .select("doc_id", "n_emails", "n_phones", "n_ips", "redacted_fp", "n_chars_clean")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dedup_edit_probe_stream", dedup.SQL_DEDUP_EDIT_PROBE)
-def q_dedup_edit_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming edit-distance probe against the frozen corpus
-    (streaming/edit_probe_stream.py): the snapshot's shingle posting
-    index and verify metadata are built once (the same trained
-    artifacts batch dedup_edit_distance reads), the corpus replays as a
-    file stream, and every micro-batch is probed for Levenshtein
-    near-dup hits with the batch tier's lossless blocking sided for
-    streaming (arriving shingles join the posting index; arriving short
-    docs join the corpus's short-doc length buckets).
-
-    Oracle: hits reference only the frozen corpus state, never other
-    in-flight docs, so the union over micro-batches equals probing the
-    whole incoming set at once — the SYMMETRIZED dedup_edit_distance
-    pair set (each pair seen from both ends, self-pairs excluded).
-    SQL_DEDUP_EDIT_PROBE certifies the stream's full output
-    (rows+schema+hash) — the thirteenth hash-certified stream."""
-    from .streaming import edit_probe_stream as EPS
-
-    tmp, tag = _stream_staging_path(sf_dir, "edit_probe_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "edit_probe")
-    out = (
-        EPS.run_edit_probe(spark, tmp, out_root, sf_dir=sf_dir, checkpoint=checkpoint)
-        .select("doc_id", "neighbor_id", "len_self", "len_neighbor", "edit_distance")
-        .orderBy("doc_id", "neighbor_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dedup_image_probe_stream", multimodal.SQL_DEDUP_IMAGE_PROBE_STREAM)
-def q_dedup_image_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming perceptual-image probe against the frozen signature
-    index (streaming/image_probe_stream.py) — the multimodal tier's
-    crawler-ingest loop: the corpus dHash signatures are the trained
-    image_phash_sigs artifact minus the arrival set, each arriving
-    micro-batch decodes its images for real (the serving decode path)
-    and probes the banded index for exact_dup / near_dup / novel.
-
-    Arrival set: whole families (base % 5 == 0 — no index side, the
-    novel branch) plus singleton strides whose families stay indexed
-    (exact/near branches) — all three verdicts fire at the gate scale.
-
-    Oracle: verdicts reference only the frozen index, never other
-    in-flight images, so the union over micro-batches equals probing
-    the whole arrival set at once — SQL_DEDUP_IMAGE_PROBE_STREAM, the
-    FOURTEENTH hash-certified stream."""
-    from pyspark.sql import functions as F
-
-    from .operators.multimodal import SPARK_PH_PROBE_COND, _phash_bands, _phash_sigs
-    from .streaming import image_probe_stream as IPS2
-
-    tmp, tag = _stream_staging_path(sf_dir, "image_probe_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(F.expr(SPARK_PH_PROBE_COND))
-        .select("doc_id")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    index_bands = _phash_bands(
-        _phash_sigs(spark, sf_dir).filter(~F.expr(SPARK_PH_PROBE_COND))
-    )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "image_probe")
-    out = (
-        IPS2.run_image_probe(
-            spark, tmp, out_root, index_bands=index_bands, checkpoint=checkpoint
-        )
-        .select("doc_id", "verdict", "n_band_candidates", "min_hamming")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dedup_video_probe_stream", multimodal.SQL_DEDUP_VIDEO_PROBE_STREAM)
-def q_dedup_video_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming video-containment probe against the frozen
-    frame-fingerprint index (streaming/video_probe_stream.py) — the
-    VIDEO leg completing the ingest-probe trifecta: arriving videos
-    walk their containers for real (PGM pixel parse -> per-frame dHash,
-    the serving decode path) and their distinct frame sets probe the
-    index's inverted (doc_id, fh) table for near_dup / novel verdicts
-    at the exact rational containment threshold.
-
-    Arrival set: the image probe's split verbatim (whole families ->
-    no index side -> novel; singleton strides -> family stays indexed
-    -> near_dup at containment 0.89-0.95).
-
-    Oracle: verdicts reference only the frozen index, never other
-    in-flight videos, so the union over micro-batches equals probing
-    the whole arrival set at once — SQL_DEDUP_VIDEO_PROBE_STREAM, the
-    SIXTEENTH hash-certified stream. The frozen index state (frame
-    table + per-video sizes) is eagerly checkpointed before the stream
-    starts, so per-batch probes read pinned blocks, never re-derive
-    the distinct."""
-    from pyspark.sql import functions as F
-
-    from .operators.multimodal import SPARK_PH_PROBE_COND, _video_fhd
-    from .streaming import video_probe_stream as VPS
-
-    tmp, tag = _stream_staging_path(sf_dir, "video_probe_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(F.expr(SPARK_PH_PROBE_COND))
-        .select("doc_id")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    ix_fhd = (
-        _video_fhd(spark, sf_dir)
-        .filter(~F.expr(SPARK_PH_PROBE_COND))
-        .localCheckpoint(eager=True)
-    )
-    ix_sizes = (
-        ix_fhd.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "video_probe")
-    out = (
-        VPS.run_video_probe(
-            spark, tmp, out_root, index_fhd=ix_fhd, index_sizes=ix_sizes,
-            checkpoint=checkpoint,
-        )
-        .select("doc_id", "verdict", "n_candidates", "best_containment")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("dedup_audio_probe_stream", multimodal.SQL_DEDUP_AUDIO_PROBE_STREAM)
-def q_dedup_audio_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming perceptual-AUDIO probe against the frozen envelope
-    signature index — the audio leg of the r16 trifecta riding the
-    image probe scaffold (judge r16 item 5): the corpus envelope
-    fingerprints are the trained audio_fp_sigs artifact minus the
-    arrival set; each arriving micro-batch synthesizes and decodes its
-    WAVs for real (RIFF walk -> frame means -> envelope dHash, the
-    serving decode path) and probes the banded index for exact_dup /
-    near_dup / novel.
-
-    Arrival set: the image probe's split verbatim (whole families with
-    no index side -> novel; singleton strides whose families stay
-    indexed -> exact/near).
-
-    Oracle: verdicts reference only the frozen index, never other
-    in-flight clips, so the union over micro-batches equals probing
-    the whole arrival set at once — SQL_DEDUP_AUDIO_PROBE_STREAM, the
-    FIFTEENTH hash-certified stream."""
-    from pyspark.sql import functions as F
-
-    from .operators.multimodal import SPARK_PH_PROBE_COND, _audio_fp_sigs, _phash_bands
-    from .streaming import image_probe_stream as IPS2
-
-    tmp, tag = _stream_staging_path(sf_dir, "audio_probe_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(F.expr(SPARK_PH_PROBE_COND))
-        .select("doc_id")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    index_bands = _phash_bands(
-        _audio_fp_sigs(spark, sf_dir).filter(~F.expr(SPARK_PH_PROBE_COND))
-    )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "audio_probe")
-    out = (
-        IPS2.run_audio_probe(
-            spark, tmp, out_root, index_bands=index_bands, checkpoint=checkpoint
-        )
-        .select("doc_id", "verdict", "n_band_candidates", "min_hamming")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("bpe_tokenize_stream", corpus.SQL_BPE_TOKENIZE)
-def q_bpe_tokenize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming BPE tokenizer application (streaming/bpe_stream.py):
-    the merge table is trained once per corpus snapshot (the
-    bpe_merge_table artifact — the same frozen state bpe_tokenize
-    serves), the corpus replays as a document file stream, and every
-    micro-batch is segmented by the BPE_MERGES literal replaces in rank
-    order — the ingest loop a training-data pipeline runs between
-    tokenizer retrains (judge r17 item 4).
-
-    Oracle: segmentations reference only the frozen merge list, never
-    other in-flight docs, so the union over micro-batches equals
-    tokenizing the whole corpus at once — which is exactly
-    bpe_tokenize. Its batch oracle SQL certifies the stream's full
-    output (rows+schema+hash — the SEVENTEENTH hash-certified stream);
-    only emission timing is a streaming-only notion."""
-    from pyspark.sql import functions as F
-
-    from .operators.corpus import bpe_merge_list
-    from .streaming import bpe_stream as BPS
-
-    tmp, tag = _stream_staging_path(sf_dir, "bpe_tokenize_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    # the frozen state is the BPE_MERGES-row pair list (bounded driver
-    # state closed over by the per-batch transform)
-    merges = bpe_merge_list(spark, sf_dir)
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "bpe_tokenize")
-    out = (
-        BPS.run_bpe_tokenize(
-            spark, tmp, out_root, merges=merges, checkpoint=checkpoint
-        )
-        .select("doc_id", "n_words", "n_symbols", "symbols_preview")
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
-
-
-@register("ann_ivfpq_probe_stream", similarity.SQL_ANN_IVFPQ_RERANK)
-def q_ann_ivfpq_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ANN probe of the PERSISTED IVF-PQ code index
-    (streaming/ann_probe_stream.py): the two-stage index is built once
-    into bucketed catalog tables (trained cents + frozen residual
-    codebook + cell-bucketed 40-bit codes + the refine store, keyed by
-    the staging tag so a regenerated dataset rebuilds), and the strided
-    query set replays as a file stream whose every micro-batch serves
-    top-k through the probe kernel — ADC over bucket-pruned codes, then
-    an exact re-rank over pruned point lookups.
-
-    Oracle: each query's top-k references only the frozen index, so the
-    union over micro-batches equals probing the whole query set at once
-    — byte-identical to ann_ivfpq_rerank on the same corpus and
-    quantizer (tests/test_pq_index.py pins the one-shot equality). Its
-    batch oracle SQL certifies the stream's full output — the
-    EIGHTEENTH hash-certified stream."""
-    from pyspark.sql import functions as F
-
-    from .functions.cachepool import managed_persist
-    from .operators.similarity import QUERY_STRIDE, _coarse_centroids, _quantized
-    from .plans.pq_index import _TABLES as _PQ_TABLES
-    from .plans.pq_index import build_pq_index
-    from .streaming import ann_probe_stream as APS
-
-    tmp, tag = _stream_staging_path(sf_dir, "ann_probe_in", "embeddings")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select("vec_id")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    ix_prefix = f"annpqix_{tag}"
-    # rebuild unless ALL FOUR index tables exist (the round-6 partial-
-    # build lesson: gating on one table would skip the rebuild forever
-    # after a crash between writes)
-    if not all(
-        spark.catalog.tableExists(f"`default`.`{ix_prefix}_{s}`") for s in _PQ_TABLES
-    ):
-        emb = managed_persist(_quantized(spark, sf_dir))
-        # the SAME trained quantizer the batch IVF-PQ tiers serve — a
-        # store hit when any ann_* query trained it first (bench runs
-        # streams last), one shared train otherwise
-        build_pq_index(
-            emb, prefix=ix_prefix, cents=_coarse_centroids(spark, sf_dir, emb)
-        )
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "ann_probe")
-    out = (
-        APS.run_ann_probe(
-            spark, tmp, out_root, prefix=ix_prefix, checkpoint=checkpoint
-        )
-        .select("query_id", "neighbor_id", "rank", "cosine_p1")
-        .orderBy("query_id", "rank")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
+# Streaming quality gate with foreachBatch quarantine multi-sink
+# (streaming/quality_stream.py): the documents table replayed as a file
+# stream, each micro-batch scored with the batch gate's rules and split
+# into kept/quarantine layers with idempotent per-batch overwrite.
+# Oracle (round 6): with the streaming-only batch_id column dropped, the
+# per-doc decisions are byte-equal to the batch quality_gate (asserted
+# by tests/test_quality_stream.py), so the batch gate's oracle SQL
+# certifies the stream's full output.
+_stream(
+    "quality_gate_stream",
+    curation.SQL_QUALITY_GATE,
+    StreamSpec(
+        kind="quality_stream_in",
+        source="documents",
+        stage=lambda docs: docs.select("doc_id", "text", "lang", "source"),
+        run=QS.run_quality_quarantine,
+        columns=("doc_id", "source", "lang", "decision", "reason"),
+    ),
+)
+
+# Streaming probe of the PERSISTED LSH dedup index — the production
+# crawler-ingest loop (streaming/index_probe_stream.py): the index side
+# of dedup_incremental's corpus is built once into bucketed catalog
+# tables (keyed by the staging tag, so a rewritten dataset rebuilds
+# instead of silently probing stale state), and the incoming side
+# replays as a file stream whose every micro-batch is probed via
+# plans/lsh_index.probe_lsh_index.
+# Oracle: verdicts reference only the index, never other in-flight docs,
+# so the union over micro-batches equals probing the whole incoming set
+# at once — which is exactly dedup_incremental. Its batch oracle SQL
+# therefore certifies the stream's full output (rows+schema+hash), the
+# strongest check a stream can carry.
+_stream(
+    "dedup_index_probe_stream",
+    dedup.SQL_DEDUP_INCREMENTAL,
+    StreamSpec(
+        kind="index_probe_in",
+        source="documents",
+        stage=lambda docs: _doc_text(docs.filter(F.col("doc_id") % dedup.INCREMENTAL_STRIDE == 0)),
+        frozen=lambda spark, sf_dir, tag: {
+            "index_prefix": _lsh_corpus_index(spark, sf_dir, f"probeix_{tag}")
+        },
+        run=IPS.run_index_probe,
+        columns=("doc_id", "verdict", "n_near_candidates"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming bigram-LM quality gate (streaming/lm_stream.py): the model
+# is trained once from the batch-side train slice (corpus.lm_train_model
+# — the same frames the batch filter uses; snapshot-keyed trained
+# artifacts, checkpointed, so every micro-batch joins pinned blocks),
+# the held slice replays as a file stream, and every micro-batch is
+# scored through corpus.lm_score_docs verbatim.
+# Oracle: scores reference only the frozen model, never other in-flight
+# docs, so the union over micro-batches equals scoring the whole held
+# set at once — which is exactly lm_bigram_score. Its batch oracle SQL
+# certifies the stream's full output (rows+schema+hash), the strongest
+# check a stream can carry; only emission timing is a streaming-only
+# notion.
+_stream(
+    "lm_score_stream",
+    corpus.SQL_LM_BIGRAM_SCORE,
+    StreamSpec(
+        kind="lm_score_in",
+        source="documents",
+        stage=lambda docs: _doc_text(docs.filter(F.col("doc_id") % corpus.LM_HELD_STRIDE == 0)),
+        frozen=lambda spark, sf_dir, tag: dict(
+            zip(("c12", "c1", "vocab"), corpus.lm_trained_model(spark, sf_dir))
+        ),
+        run=LMS.run_lm_score,
+        columns=("doc_id", "n_bigrams", "n_oov_bigrams", "avg_bits"),
+        order=("doc_id",),
+    ),
+)
+
+
+def _dsir_raw(docs: DataFrame) -> DataFrame:
+    return _doc_text(docs.filter(~F.col("source").isin(*corpus.DSIR_TARGET_SOURCES)))
+
+
+# Streaming DSIR importance gate (streaming/dsir_stream.py): the B-row
+# hashed-n-gram importance model is the snapshot-keyed trained artifact
+# (corpus.dsir_model — the same frame the batch selector reads), the raw
+# (non-target) slice replays as a file stream, and every micro-batch is
+# scored through corpus.dsir_score_docs verbatim.
+# Oracle: weights reference only the frozen model, never other in-flight
+# docs, so the union over micro-batches equals scoring the whole raw
+# slice at once — which is exactly dsir_importance. Its batch oracle SQL
+# certifies the stream's full output (rows+schema+hash); only emission
+# timing is a streaming-only notion.
+_stream(
+    "dsir_score_stream",
+    corpus.SQL_DSIR_IMPORTANCE,
+    StreamSpec(
+        kind="dsir_score_in",
+        source="documents",
+        stage=_dsir_raw,
+        frozen=_dsir_state,
+        run=DSIR.run_dsir_score,
+        columns=("doc_id", "n_feat", "log2_w", "avg_bits"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming DSIR SELECTION gate (streaming/dsir_stream.py) — the
+# eleventh hash-certified stream, closing the score -> plan -> sample
+# loop in the ingest path: the B-row model and the per-snapshot
+# acceptance plan are snapshot-keyed trained artifacts
+# (corpus.dsir_model / dsir_accept_plan — the same frames the batch
+# selector reads), the raw slice replays as a file stream (the staged
+# input dsir_score_stream replays), and every micro-batch is scored AND
+# filtered through corpus.dsir_select_docs verbatim.
+# Oracle: weight and keep/drop are per-doc pure functions of frozen
+# state, so the union over micro-batches equals batch dsir_sample — its
+# oracle SQL certifies the stream's full output (rows+schema+hash); only
+# emission timing is a streaming-only notion.
+_stream(
+    "dsir_sample_stream",
+    corpus.SQL_DSIR_SAMPLE,
+    StreamSpec(
+        kind="dsir_score_in",
+        source="documents",
+        stage=_dsir_raw,
+        frozen=lambda spark, sf_dir, tag: {
+            **_dsir_state(spark, sf_dir, tag),
+            "plan": corpus.dsir_accept_plan(spark, sf_dir),
+        },
+        run=DSIR.run_dsir_sample,
+        columns=("doc_id", "log2_w", "accept_num"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming Bloom-prescreened decontamination
+# (streaming/contamination_stream.py): the probe-set bitmap + exact
+# probe-gram relation are frozen once per snapshot
+# (curation.bloom_trained_state — the auto-sized geometry-keyed trained
+# artifact the batch operator shares), the corpus slice replays as a
+# file stream, and every micro-batch runs curation.bloom_score_docs
+# verbatim: grams die against the broadcast bitmap map-side, survivors
+# verify against the exact probe relation.
+# Oracle: per-doc contamination references only the frozen probe set,
+# never other in-flight docs, so the union over micro-batches equals
+# checking the whole corpus slice at once — which (prescreen being
+# lossless) is exactly contamination_check. Its batch oracle SQL
+# certifies the stream's full output (rows+schema+hash), the strongest
+# check a stream can carry — the ninth hash-certified stream.
+_stream(
+    "contamination_bloom_stream",
+    curation.SQL_CONTAMINATION_CHECK,
+    StreamSpec(
+        kind="contamination_in",
+        source="documents",
+        stage=lambda docs: _doc_text(docs.filter(F.col("doc_id") % curation.PROBE_STRIDE != 0)),
+        frozen=lambda spark, sf_dir, tag: dict(
+            zip(("bf_row", "probes", "m_log2"), curation.bloom_trained_state(spark, sf_dir))
+        ),
+        run=CS.run_contamination,
+        columns=("doc_id", "n_grams", "n_overlap", "contamination"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming PII scrub (streaming/pii_stream.py): the corpus replays as a
+# file stream and every micro-batch is counted and redacted through
+# curation.scrub_pii_docs verbatim — the scrub-at-the-edge position a
+# production privacy gate holds, so dirty bytes never land downstream.
+# Oracle: counts and redaction are per-document pure functions (no
+# trained state, no cross-doc reference), so the union over
+# micro-batches equals scrubbing the whole corpus at once — which is
+# exactly pii_scrub. Its batch oracle SQL certifies the stream's full
+# output (rows+schema+hash), the strongest check a stream can carry —
+# the twelfth hash-certified stream.
+_stream(
+    "pii_scrub_stream",
+    curation.SQL_PII_SCRUB,
+    StreamSpec(
+        kind="pii_scrub_in",
+        source="documents",
+        stage=_doc_text,
+        run=PS.run_pii_scrub,
+        columns=("doc_id", "n_emails", "n_phones", "n_ips", "redacted_fp", "n_chars_clean"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming edit-distance probe against the frozen corpus
+# (streaming/edit_probe_stream.py): the snapshot's shingle posting index
+# and verify metadata are built once (the same trained artifacts batch
+# dedup_edit_distance reads), the corpus replays as a file stream, and
+# every micro-batch is probed for Levenshtein near-dup hits with the
+# batch tier's lossless blocking sided for streaming (arriving shingles
+# join the posting index; arriving short docs join the corpus's
+# short-doc length buckets).
+# Oracle: hits reference only the frozen corpus state, never other
+# in-flight docs, so the union over micro-batches equals probing the
+# whole incoming set at once — the SYMMETRIZED dedup_edit_distance pair
+# set (each pair seen from both ends, self-pairs excluded).
+# SQL_DEDUP_EDIT_PROBE certifies the stream's full output
+# (rows+schema+hash) — the thirteenth hash-certified stream.
+_stream(
+    "dedup_edit_probe_stream",
+    dedup.SQL_DEDUP_EDIT_PROBE,
+    StreamSpec(
+        kind="edit_probe_in",
+        source="documents",
+        stage=_doc_text,
+        frozen=lambda spark, sf_dir, tag: {"sf_dir": sf_dir},
+        run=EPS.run_edit_probe,
+        columns=("doc_id", "neighbor_id", "len_self", "len_neighbor", "edit_distance"),
+        order=("doc_id", "neighbor_id"),
+    ),
+)
+
+# Streaming perceptual-image probe against the frozen signature index
+# (streaming/image_probe_stream.py) — the multimodal tier's
+# crawler-ingest loop: the corpus dHash signatures are the trained
+# image_phash_sigs artifact minus the arrival set (_probe_arrivals), each
+# arriving micro-batch decodes its images for real (the serving decode
+# path) and probes the banded index for exact_dup / near_dup / novel —
+# all three verdicts fire at the gate scale.
+# Oracle: verdicts reference only the frozen index, never other
+# in-flight images, so the union over micro-batches equals probing the
+# whole arrival set at once — SQL_DEDUP_IMAGE_PROBE_STREAM, the
+# FOURTEENTH hash-certified stream.
+_stream(
+    "dedup_image_probe_stream",
+    multimodal.SQL_DEDUP_IMAGE_PROBE_STREAM,
+    StreamSpec(
+        kind="image_probe_in",
+        source="documents",
+        stage=_probe_arrivals,
+        frozen=_phash_index(multimodal._phash_sigs),
+        run=IMG.run_image_probe,
+        columns=("doc_id", "verdict", "n_band_candidates", "min_hamming"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming video-containment probe against the frozen frame-fingerprint
+# index (streaming/video_probe_stream.py) — the VIDEO leg completing the
+# ingest-probe trifecta: arriving videos walk their containers for real
+# (PGM pixel parse -> per-frame dHash, the serving decode path) and
+# their distinct frame sets probe the index's inverted (doc_id, fh)
+# table for near_dup / novel verdicts at the exact rational containment
+# threshold. Arrival set: the image probe's split verbatim (whole
+# families -> no index side -> novel; singleton strides -> family stays
+# indexed -> near_dup at containment 0.89-0.95).
+# Oracle: verdicts reference only the frozen index, never other
+# in-flight videos, so the union over micro-batches equals probing the
+# whole arrival set at once — SQL_DEDUP_VIDEO_PROBE_STREAM, the
+# SIXTEENTH hash-certified stream. The frozen index state (frame table +
+# per-video sizes) is eagerly checkpointed before the stream starts, so
+# per-batch probes read pinned blocks, never re-derive the distinct.
+_stream(
+    "dedup_video_probe_stream",
+    multimodal.SQL_DEDUP_VIDEO_PROBE_STREAM,
+    StreamSpec(
+        kind="video_probe_in",
+        source="documents",
+        stage=_probe_arrivals,
+        frozen=_video_index,
+        run=VPS.run_video_probe,
+        columns=("doc_id", "verdict", "n_candidates", "best_containment"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming perceptual-AUDIO probe against the frozen envelope signature
+# index — the audio leg of the trifecta riding the image probe scaffold:
+# the corpus envelope fingerprints are the trained audio_fp_sigs
+# artifact minus the arrival set; each arriving micro-batch synthesizes
+# and decodes its WAVs for real (RIFF walk -> frame means -> envelope
+# dHash, the serving decode path) and probes the banded index for
+# exact_dup / near_dup / novel. Arrival set: the image probe's split
+# verbatim (whole families with no index side -> novel; singleton
+# strides whose families stay indexed -> exact/near).
+# Oracle: verdicts reference only the frozen index, never other
+# in-flight clips, so the union over micro-batches equals probing the
+# whole arrival set at once — SQL_DEDUP_AUDIO_PROBE_STREAM, the
+# FIFTEENTH hash-certified stream.
+_stream(
+    "dedup_audio_probe_stream",
+    multimodal.SQL_DEDUP_AUDIO_PROBE_STREAM,
+    StreamSpec(
+        kind="audio_probe_in",
+        source="documents",
+        stage=_probe_arrivals,
+        frozen=_phash_index(multimodal._audio_fp_sigs),
+        run=IMG.run_audio_probe,
+        columns=("doc_id", "verdict", "n_band_candidates", "min_hamming"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming BPE tokenizer application (streaming/bpe_stream.py): the
+# merge table is trained once per corpus snapshot (the bpe_merge_table
+# artifact — the same frozen state bpe_tokenize serves; the
+# BPE_MERGES-row pair list is bounded driver state closed over by the
+# per-batch transform), the corpus replays as a document file stream,
+# and every micro-batch is segmented by the BPE_MERGES literal replaces
+# in rank order — the ingest loop a training-data pipeline runs between
+# tokenizer retrains.
+# Oracle: segmentations reference only the frozen merge list, never
+# other in-flight docs, so the union over micro-batches equals
+# tokenizing the whole corpus at once — which is exactly bpe_tokenize.
+# Its batch oracle SQL certifies the stream's full output
+# (rows+schema+hash — the SEVENTEENTH hash-certified stream); only
+# emission timing is a streaming-only notion.
+_stream(
+    "bpe_tokenize_stream",
+    corpus.SQL_BPE_TOKENIZE,
+    StreamSpec(
+        kind="bpe_tokenize_in",
+        source="documents",
+        stage=_doc_text,
+        frozen=lambda spark, sf_dir, tag: {"merges": corpus.bpe_merge_list(spark, sf_dir)},
+        run=BPS.run_bpe_tokenize,
+        columns=("doc_id", "n_words", "n_symbols", "symbols_preview"),
+        order=("doc_id",),
+    ),
+)
+
+# Streaming ANN probe of the PERSISTED IVF-PQ code index
+# (streaming/ann_probe_stream.py): the two-stage index is built once
+# into bucketed catalog tables (trained cents + frozen residual codebook
+# + cell-bucketed 40-bit codes + the refine store, keyed by the staging
+# tag so a rewritten dataset rebuilds), and the strided query set
+# replays as a file stream whose every micro-batch serves top-k through
+# the probe kernel — ADC over bucket-pruned codes, then an exact
+# re-rank over pruned point lookups.
+# Oracle: each query's top-k references only the frozen index, so the
+# union over micro-batches equals probing the whole query set at once —
+# byte-identical to ann_ivfpq_rerank on the same corpus and quantizer
+# (tests/test_pq_index.py pins the one-shot equality). Its batch oracle
+# SQL certifies the stream's full output — the EIGHTEENTH hash-certified
+# stream.
+_stream(
+    "ann_ivfpq_probe_stream",
+    similarity.SQL_ANN_IVFPQ_RERANK,
+    StreamSpec(
+        kind="ann_probe_in",
+        source="embeddings",
+        stage=lambda emb: emb.filter(F.col("vec_id") % similarity.QUERY_STRIDE == 0).select("vec_id"),
+        frozen=_ann_index,
+        run=APS.run_ann_probe,
+        columns=("query_id", "neighbor_id", "rank", "cosine_p1"),
+        order=("query_id", "rank"),
+    ),
+)
 
 
 def _sql_ingest_gate_stream() -> str:
@@ -1433,80 +1091,36 @@ JOIN sym ON q.doc_id = sym.doc_id
 ORDER BY q.doc_id"""
 
 
-@register("ingest_gate_stream", _sql_ingest_gate_stream())
-def q_ingest_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed streaming INGEST ADMISSION GATE
-    (streaming/ingest_gate_stream.py): quality reason + PII exposure +
-    Bloom-prescreened decontamination + persisted-LSH-index near-dup
-    verdict + frozen-tokenizer symbol count, joined per arriving doc
-    into one admission row — the front-door decision a training-data
-    pipeline makes, and the ingest-time twin of corpus_build_funnel.
-
-    Oracle: every column is a per-doc pure function of frozen state
-    (stateless maps, the frozen bitmap + probe relation, the persisted
-    index, the frozen merge list), so the union over micro-batches
-    equals evaluating the whole arrival set at once — certified against
-    the composition of the stage oracles (the NINETEENTH hash-certified
-    stream)."""
-    from pyspark.sql import functions as F
-
-    from .operators.corpus import bpe_merge_list
-    from .operators.curation import PROBE_STRIDE, bloom_trained_state
-    from .operators.dedup import INCREMENTAL_STRIDE, docs_normalized
-    from .plans.lsh_index import build_lsh_index
-    from .streaming import ingest_gate_stream as IGS
-
-    tmp, tag = _stream_staging_path(sf_dir, "ingest_gate_in", "documents")
-    _ensure_staged(
-        tmp,
-        lambda p: load_table(spark, sf_dir, "documents")
-        .filter(
-            (F.col("doc_id") % INCREMENTAL_STRIDE == 0)
-            & (F.col("doc_id") % PROBE_STRIDE != 0)
-        )
-        .select("doc_id", "text")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    ix_prefix = f"ingateix_{tag}"
-    if not all(
-        spark.catalog.tableExists(f"`default`.`{ix_prefix}_{s}`")
-        for s in ("digests", "bands", "shingles")
-    ):
-        build_lsh_index(
-            docs_normalized(spark, sf_dir).filter(
-                F.col("doc_id") % INCREMENTAL_STRIDE != 0
-            ),
-            prefix=ix_prefix,
-        )
-    bf_row, probes, m_log2 = bloom_trained_state(spark, sf_dir)
-    # eager checkpoint: the stream drains the cachepool per batch, and a
-    # drained lazy probe relation would re-derive its corpus scan every
-    # micro-batch; checkpointed blocks are drain-proof
-    probes = probes.localCheckpoint(eager=True)
-    merges = bpe_merge_list(spark, sf_dir)
-    out_root, checkpoint = _stream_run_dirs(sf_dir, "ingest_gate")
-    out = (
-        IGS.run_ingest_gate(
-            spark,
-            tmp,
-            out_root,
-            index_prefix=ix_prefix,
-            bf_row=bf_row,
-            probes=probes,
-            m_log2=m_log2,
-            merges=merges,
-            checkpoint=checkpoint,
-        )
-        .select(
-            "doc_id", "reason", "n_pii", "contaminated", "dedup_verdict",
-            "n_symbols", "admitted",
-        )
-        .orderBy("doc_id")
-    )
-    _finish_stream_run(out_root)  # replay terminated inside run_*
-    return out
+# Composed streaming INGEST ADMISSION GATE
+# (streaming/ingest_gate_stream.py): quality reason + PII exposure +
+# Bloom-prescreened decontamination + persisted-LSH-index near-dup
+# verdict + frozen-tokenizer symbol count, joined per arriving doc into
+# one admission row — the front-door decision a training-data pipeline
+# makes, and the ingest-time twin of corpus_build_funnel.
+# Oracle: every column is a per-doc pure function of frozen state
+# (stateless maps, the frozen bitmap + probe relation, the persisted
+# index, the frozen merge list), so the union over micro-batches equals
+# evaluating the whole arrival set at once — certified against the
+# composition of the stage oracles (the NINETEENTH hash-certified
+# stream).
+_stream(
+    "ingest_gate_stream",
+    _sql_ingest_gate_stream(),
+    StreamSpec(
+        kind="ingest_gate_in",
+        source="documents",
+        stage=lambda docs: _doc_text(
+            docs.filter(
+                (F.col("doc_id") % dedup.INCREMENTAL_STRIDE == 0)
+                & (F.col("doc_id") % curation.PROBE_STRIDE != 0)
+            )
+        ),
+        frozen=_ingest_gate_state,
+        run=IGS.run_ingest_gate,
+        columns=("doc_id", "reason", "n_pii", "contaminated", "dedup_verdict", "n_symbols", "admitted"),
+        order=("doc_id",),
+    ),
+)
 
 
 def _sql_range_join_stream_oracle() -> str:
@@ -1530,43 +1144,36 @@ JOIN events p
 ORDER BY view_id, gap_s"""
 
 
-@register("range_join_stream", _sql_range_join_stream_oracle())
-def q_range_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream interval join (views x purchases within
-    the band) — the streaming tier of purchases_near_views_range.
-
-    Oracle (round 7): the emitted PAIR SET is batch-order-independent —
-    the join is data-driven (a pair emits when both sides have arrived)
-    and WATERMARK_DELAY exceeds the staged data's event-time span, so no
-    pair is ever dropped as late (run_files_to_memory raises on any
-    numRowsDroppedByWatermark). The finite replay therefore emits
-    exactly the batch interval-join pair set, and the driver check
-    upgrades from rows-only to rows+schema+hash; only the emission
-    TIMING remains a streaming-only notion. gap_s re-rounds with the
-    portable roundn on both sides."""
-    from pyspark.sql import functions as F
-
-    from .functions.portable import roundn
-    from .streaming import range_join_stream as RJ
-
-    tmp, tag = _stream_staging_path(sf_dir, "rjoin_stream_in", "events")
-    _ensure_staged(
-        tmp,
+# Watermarked stream-stream interval join (views x purchases within the
+# band) — the streaming tier of purchases_near_views_range.
+# Oracle (round 7): the emitted PAIR SET is batch-order-independent —
+# the join is data-driven (a pair emits when both sides have arrived)
+# and WATERMARK_DELAY exceeds the staged data's event-time span, so no
+# pair is ever dropped as late (run_files_to_memory raises on any
+# numRowsDroppedByWatermark). The finite replay therefore emits exactly
+# the batch interval-join pair set, and the driver check upgrades from
+# rows-only to rows+schema+hash; only the emission TIMING remains a
+# streaming-only notion. gap_s re-rounds with the portable roundn on
+# both sides.
+_stream(
+    "range_join_stream",
+    _sql_range_join_stream_oracle(),
+    StreamSpec(
+        kind="rjoin_stream_in",
+        source="events",
         # stage only the two event types the join consumes: the stream's
         # own filters would drop the rest anyway, and the replay is 2/5
         # the size (pure staging optimization, not a semantic change)
-        lambda p: load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "purchase"))
-        .select("event_id", "user_id", F.col("ts").cast("double").alias("ts_s"), "event_type")
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(p),
-    )
-    return (
-        RJ.run_files_to_memory(spark, tmp, table_name=tag)
-        .select("view_id", "user_id", roundn(F.col("gap_s"), 3).alias("gap_s"))
-        .orderBy("view_id", "gap_s")
-    )
+        stage=lambda events: events.filter(F.col("event_type").isin("view", "purchase")).select(
+            "event_id", "user_id", F.col("ts").cast("double").alias("ts_s"), "event_type"
+        ),
+        run=RJ.run_files_to_memory,
+        memory_sink=True,
+        columns=("view_id", "user_id", "gap_s"),
+        rounded=("gap_s",),
+        order=("view_id", "gap_s"),
+    ),
+)
 
 
 def _with_drain(fn: QueryFn) -> QueryFn:

@@ -68,6 +68,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory() -> str:
+    """The driver heap, which in single-JVM local mode is also the
+    executor heap: $SPARK_GRAFT_DRIVER_MEM, else a sixth of physical RAM
+    clamped to 1-4 GiB, since the machine may be shared (the rule
+    perfbench's host sizing uses). A heap that may grow past physical
+    memory turns a spill into the OS killing the process."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{int(max(1, min(4, ram_gib // 6)))}g"
+
+
 def java_home() -> Path | None:
     """The JDK spark-class runs: $JAVA_HOME, else the first java on PATH."""
     if os.environ.get("JAVA_HOME"):
@@ -210,11 +223,7 @@ def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions:
         # trips and 0.33 s with it on, 304 and 0.14 s with it off. The only
         # loss is the call-site fragment in analysis-error messages.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Single-JVM local mode: the driver heap IS the executor heap. 16g on
-        # the 128 GiB harness box keeps 32 concurrent tasks' join/sort buffers
-        # out of GC churn — suite timings showed intermittent multi-second
-        # pauses (different victim queries each run) at 8g.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Off: the [Stage N: ...] bar shares a terminal line with the
         # result lines of bench.py and tools/.

@@ -9,9 +9,6 @@ a coalesce(1) barrier onto one task.
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
 from pyspark.sql import DataFrame
 
 from ..schemas import KPI_COLUMNS
@@ -41,10 +38,3 @@ def write_text(df: DataFrame, path: str, *, column: str | None = None) -> None:
     """K4: plain-text sink (reference src/http_client.py:27-30)."""
     out = df.select(column) if column else df
     out.write.mode("overwrite").text(path)
-
-
-def write_json_pretty(obj: object, path: str) -> None:
-    """K3: driver-side pretty JSON dump for singleton payloads (reference
-    src/http_client.py:33-36) — a driver utility, not a cluster sink."""
-    Path(path).parent.mkdir(parents=True, exist_ok=True)
-    Path(path).write_text(json.dumps(obj, indent=2, ensure_ascii=False), encoding="utf-8")

@@ -28,11 +28,14 @@ identical files (the run_with_quarantine contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textprep as tp
 from ..operators.corpus import _bpe_apply_prepped, _bpe_symbols_select
+from .runner import run_transform_stream
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -51,29 +54,8 @@ def bpe_tokenize_batch(batch: DataFrame, merges: list[tuple]) -> DataFrame:
     return _bpe_symbols_select(_bpe_apply_prepped(prepped, merges))
 
 
-def run_bpe_tokenize(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    merges: list[tuple],
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the document file stream to completion (availableNow),
-    segmenting every micro-batch with the frozen merge list and writing
-    per-doc symbol accounting partitioned by batch_id with idempotent
-    per-batch overwrite. Returns the read-back union
-    (doc_id, n_words, n_symbols, symbols_preview, batch_id)."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="symbols",
-        checkpoint=checkpoint,
-        transform=lambda batch: bpe_tokenize_batch(batch, merges),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Segments every micro-batch with the frozen merge list into per-doc
+# symbol accounting (doc_id, n_words, n_symbols, symbols_preview).
+run_bpe_tokenize = partial(
+    run_transform_stream, schema=DOC_SCHEMA, layer="symbols", transform=bpe_tokenize_batch
+)

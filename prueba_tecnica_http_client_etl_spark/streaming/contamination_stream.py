@@ -26,12 +26,15 @@ identical files (the run_with_quarantine contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textprep as tp
 from ..operators.curation import _SPARK_GRAMS, bloom_score_docs
 from .lm_stream import DOC_SCHEMA
+from .runner import run_transform_stream
 
 
 def _grammed_batch(docs: DataFrame) -> DataFrame:
@@ -47,38 +50,17 @@ def _grammed_batch(docs: DataFrame) -> DataFrame:
     )
 
 
-def run_contamination(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    bf_row: DataFrame,
-    probes: DataFrame,
-    m_log2: int,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the document file stream to completion (availableNow),
-    scoring every micro-batch through curation.bloom_score_docs against
-    the frozen (bitmap, probe grams, geometry) state and writing
-    contamination rows partitioned by batch_id with idempotent
-    per-batch overwrite. bf_row is a checkpointed trained artifact and
-    probes a pooled frame — every micro-batch joins pinned blocks.
-    Returns the read-back union (doc_id, n_grams, n_overlap,
-    contamination, batch_id)."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="scores",
-        checkpoint=checkpoint,
-        # ordered=False: the parquet write discards ordering, so the
-        # batch operator's final sort is per-micro-batch tax here
-        transform=lambda batch: bloom_score_docs(
-            _grammed_batch(batch), bf_row, probes, m_log2, ordered=False
-        ),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Scores every micro-batch through curation.bloom_score_docs against the
+# frozen (bitmap, probe grams, geometry) state into (doc_id, n_grams,
+# n_overlap, contamination). bf_row is a checkpointed trained artifact
+# and probes a pooled frame — every micro-batch joins pinned blocks.
+# ordered=False: the parquet write discards ordering, so the batch
+# operator's final sort is per-micro-batch tax here.
+run_contamination = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="scores",
+    transform=lambda batch, bf_row, probes, m_log2: bloom_score_docs(
+        _grammed_batch(batch), bf_row, probes, m_log2, ordered=False
+    ),
+)

@@ -10,7 +10,7 @@ in LATER micro-batches are always dropped by the state store, while
 duplicates landing in the SAME micro-batch keep an arbitrary
 (partition-order-dependent) survivor — which doc_id wins is a
 streaming-only notion, exactly why the certified oracle checks the
-digest SET and not the survivor (registry.q_dedup_stream). Docs with a
+digest SET and not the survivor (the dedup_stream row in registry.py). Docs with a
 null/missing text carry no content identity (their digest is NULL, and
 dropDuplicates would collapse them all onto one surviving row as if
 they were copies of each other) — they are filtered out; the curation
@@ -94,23 +94,17 @@ def run_files_to_memory_ttl(
     memory sink; returns (result frame, final progress dict) — the
     progress carries stateOperators[0].numRowsTotal, the direct
     measurement that eviction bounded the store."""
-    from .tuning import stream_shuffle
+    from .runner import drain_to_memory
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if one_file_per_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    out = dedup_stream_ttl(reader.json(input_path), delay=delay)
-    with stream_shuffle(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = q.lastProgress
-    return spark.table(table_name), progress
+    q = drain_to_memory(
+        spark,
+        input_path,
+        schema=DOC_SCHEMA,
+        build=lambda docs: dedup_stream_ttl(docs, delay=delay),
+        table_name=table_name,
+        one_file_per_batch=one_file_per_batch,
+    )
+    return spark.table(table_name), q.lastProgress
 
 
 def run_files_to_memory(
@@ -118,19 +112,14 @@ def run_files_to_memory(
 ) -> DataFrame:
     """Drive the file stream to completion (availableNow) into a memory
     sink; one file per micro-batch exercises cross-batch suppression."""
-    from .tuning import stream_shuffle
+    from .runner import drain_to_memory
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if one_file_per_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    out = dedup_stream(reader.json(input_path))
-    with stream_shuffle(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_to_memory(
+        spark,
+        input_path,
+        schema=DOC_SCHEMA,
+        build=dedup_stream,
+        table_name=table_name,
+        one_file_per_batch=one_file_per_batch,
+    )
     return spark.table(table_name)

@@ -22,80 +22,43 @@ converges to identical files (the run_with_quarantine contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
 
-from ..operators.corpus import dsir_score_docs
+from ..operators.corpus import dsir_score_docs, dsir_select_docs
 from .lm_stream import DOC_SCHEMA, _prepped_batch
+from .runner import run_transform_stream
 
 
-def run_dsir_score(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    model: DataFrame,
-    totals: DataFrame,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the document file stream to completion (availableNow),
-    scoring every micro-batch against the frozen (model, totals) frames
-    and writing scores partitioned by batch_id with idempotent
-    per-batch overwrite. The model frames should be checkpointed /
-    persisted by the caller (each micro-batch joins them). Returns the
-    read-back union (doc_id, n_feat, log2_w, avg_bits, batch_id)."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="scores",
-        checkpoint=checkpoint,
-        transform=lambda batch: dsir_score_docs(_prepped_batch(batch), model, totals),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Scores every micro-batch against the frozen (model, totals) frames into
+# (doc_id, n_feat, log2_w, avg_bits). The model frames should be
+# checkpointed / persisted by the caller (each micro-batch joins them).
+run_dsir_score = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="scores",
+    transform=lambda batch, model, totals: dsir_score_docs(_prepped_batch(batch), model, totals),
+)
 
 
-def run_dsir_sample(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    model: DataFrame,
-    totals: DataFrame,
-    plan: DataFrame,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """The ingest-time SELECTION gate — the streaming leg of the full
-    DSIR loop (score -> plan -> sample): every arriving micro-batch is
-    scored against the frozen (model, totals) and immediately filtered
-    through the frozen acceptance plan (corpus.dsir_select_docs — the
-    deterministic salted-hash Bernoulli dsir_sample applies in batch).
-    Per-batch cost is |batch| feature occurrences joined to the
-    broadcastable model plus a broadcast plan-row filter; accepted docs
-    flow on, rejected docs stop here — the bandwidth-saving shape a
-    production ingest pipeline wants (score AND select at the edge,
-    ship only the kept quarter).
-
-    Both the weight and the keep/drop are per-document pure functions
-    of frozen state, so the union of per-batch selections is
-    byte-identical to batch dsir_sample over the same raw slice —
-    certified against its oracle SQL verbatim."""
-    from ..operators.corpus import dsir_score_docs, dsir_select_docs
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="kept",
-        checkpoint=checkpoint,
-        transform=lambda batch: dsir_select_docs(
-            dsir_score_docs(_prepped_batch(batch), model, totals), plan
-        ),
-        one_file_per_batch=one_file_per_batch,
-    )
+# The ingest-time SELECTION gate — the streaming leg of the full DSIR
+# loop (score -> plan -> sample): every arriving micro-batch is scored
+# against the frozen (model, totals) and immediately filtered through the
+# frozen acceptance plan (corpus.dsir_select_docs — the deterministic
+# salted-hash Bernoulli dsir_sample applies in batch). Per-batch cost is
+# |batch| feature occurrences joined to the broadcastable model plus a
+# broadcast plan-row filter; accepted docs flow on, rejected docs stop
+# here — the bandwidth-saving shape a production ingest pipeline wants
+# (score AND select at the edge, ship only the kept quarter).
+#
+# Both the weight and the keep/drop are per-document pure functions of
+# frozen state, so the union of per-batch selections is byte-identical
+# to batch dsir_sample over the same raw slice — certified against its
+# oracle SQL verbatim.
+run_dsir_sample = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="kept",
+    transform=lambda batch, model, totals, plan: dsir_select_docs(
+        dsir_score_docs(_prepped_batch(batch), model, totals), plan
+    ),
+)

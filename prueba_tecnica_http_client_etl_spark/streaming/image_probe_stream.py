@@ -27,7 +27,9 @@ frames rather than silently reading 'novel'.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
@@ -36,6 +38,7 @@ from ..operators.multimodal import (
     _phash_bands,
     _phash_batches,
 )
+from .runner import run_transform_stream
 
 DOC_SCHEMA = "doc_id long"
 
@@ -83,57 +86,20 @@ def probe_phash_batch(
     )
 
 
-def run_image_probe(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    index_bands: DataFrame,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the arrival stream to completion (availableNow), probing
-    every micro-batch against the frozen banded signature index, with
-    idempotent per-batch overwrite (the runner contract). Returns the
-    read-back union."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="verdicts",
-        checkpoint=checkpoint,
-        transform=lambda batch: probe_phash_batch(batch, index_bands),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Probes every arriving micro-batch against the frozen banded signature
+# index.
+run_image_probe = partial(
+    run_transform_stream, schema=DOC_SCHEMA, layer="verdicts", transform=probe_phash_batch
+)
 
 
-def run_audio_probe(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    index_bands: DataFrame,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """The audio twin of run_image_probe: arriving clips synthesize and
-    decode their WAVs for real (RIFF walk -> frame means -> envelope
-    dHash, the serving decode path) and probe the frozen audio
-    signature index. Same runner contract and verdict schema."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="verdicts",
-        checkpoint=checkpoint,
-        transform=lambda batch: probe_phash_batch(
-            batch, index_bands, sig_batches=_audio_fp_batches
-        ),
-        one_file_per_batch=one_file_per_batch,
-    )
+# The audio twin of run_image_probe: arriving clips synthesize and decode
+# their WAVs for real (RIFF walk -> frame means -> envelope dHash, the
+# serving decode path) and probe the frozen audio signature index. Same
+# runner contract and verdict schema.
+run_audio_probe = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="verdicts",
+    transform=partial(probe_phash_batch, sig_batches=_audio_fp_batches),
+)

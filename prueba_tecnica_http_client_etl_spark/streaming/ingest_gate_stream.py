@@ -32,7 +32,9 @@ state; the runner drains the pool per batch (bounded stream state).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textprep as tp
@@ -45,6 +47,7 @@ from ..operators.curation import (
     with_quality_reason,
 )
 from ..plans.lsh_index import probe_lsh_index
+from .runner import run_transform_stream
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -107,41 +110,14 @@ def ingest_gate_batch(
     )
 
 
-def run_ingest_gate(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    index_prefix: str,
-    bf_row: DataFrame,
-    probes: DataFrame,
-    m_log2: int,
-    merges: list[tuple],
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the arrival stream to completion (availableNow), gating
-    every micro-batch against the frozen stage state with idempotent
-    per-batch overwrite. Returns the read-back union (doc_id, reason,
-    n_pii, contaminated, dedup_verdict, n_symbols, admitted,
-    batch_id)."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="admissions",
-        checkpoint=checkpoint,
-        transform=lambda batch: ingest_gate_batch(
-            batch,
-            index_prefix=index_prefix,
-            bf_row=bf_row,
-            probes=probes,
-            m_log2=m_log2,
-            merges=merges,
-        ),
-        one_file_per_batch=one_file_per_batch,
-        drain_pool_per_batch=True,
-    )
+# Gates every arriving micro-batch against the frozen stage state into
+# (doc_id, reason, n_pii, contaminated, dedup_verdict, n_symbols,
+# admitted); ingest_gate_batch pools its prepped batch, so the pool is
+# drained per batch.
+run_ingest_gate = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="admissions",
+    transform=ingest_gate_batch,
+    drain_pool_per_batch=True,
+)

@@ -32,15 +32,6 @@ from ..functions.cleaning import TIMESTAMP_FMT, normalize_endpoint
 from ..schemas import LOG_SCHEMA
 
 
-def read_log_stream(spark: SparkSession, path: str, *, max_files_per_trigger: int | None = None) -> DataFrame:
-    """S1 as a stream: JSONL directory source with the explicit LOG_SCHEMA
-    (no inference job; corrupt rows handled by the same try_cast layer)."""
-    reader = spark.readStream.schema(LOG_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
-
-
 def clean_http_log_stream(raw: DataFrame) -> DataFrame:
     """P1-P7 with an event-time column. Mirrors functions.cleaning
     .clean_http_log (same try_cast + flag coupling — reference
@@ -139,9 +130,6 @@ def run_with_quarantine(
                 lambda d: d.select(F.col(CORRUPT_COL).alias("raw")),
             ),
         ],
-        # pre-runner behavior: this drain loop ran under the session's
-        # default shuffle config (its per-batch work is filter-only)
-        tuned_shuffle=False,
     )
     return {
         "silver": spark.read.parquet(f"{out_root}/silver").count(),
@@ -154,17 +142,17 @@ def run_to_memory(spark: SparkSession, input_path: str, *, table_name: str = "kp
     `input_path` (availableNow trigger) into an in-memory sink — the test/
     demo harness. Complete output mode: every trigger re-emits the full
     KPI table, so finite input yields exactly the batch answer (append
-    mode would hold back windows above the watermark)."""
-    from .tuning import stream_shuffle
+    mode would hold back windows above the watermark). The source is S1
+    as a stream: the JSONL directory with the explicit LOG_SCHEMA (no
+    inference job; corrupt rows handled by the same try_cast layer)."""
+    from .runner import drain_to_memory
 
-    kpis = kpi_daily_stream(clean_http_log_stream(read_log_stream(spark, input_path)))
-    with stream_shuffle(spark):
-        q = (
-            kpis.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_to_memory(
+        spark,
+        input_path,
+        schema=LOG_SCHEMA,
+        build=lambda raw: kpi_daily_stream(clean_http_log_stream(raw)),
+        table_name=table_name,
+        output_mode="complete",
+    )
     return spark.table(table_name)

@@ -20,11 +20,14 @@ converges to identical files (the run_with_quarantine contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textprep as tp
 from ..operators.corpus import lm_score_docs
+from .runner import run_transform_stream
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -40,32 +43,12 @@ def _prepped_batch(docs: DataFrame) -> DataFrame:
     )
 
 
-def run_lm_score(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    c12: DataFrame,
-    c1: DataFrame,
-    vocab: DataFrame,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the document file stream to completion (availableNow),
-    scoring every micro-batch against the frozen (c12, c1, vocab) model
-    frames and writing scores partitioned by batch_id with idempotent
-    per-batch overwrite. The model frames should be persisted by the
-    caller (each micro-batch joins them). Returns the read-back union
-    (doc_id, n_bigrams, n_oov_bigrams, avg_bits, batch_id)."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="scores",
-        checkpoint=checkpoint,
-        transform=lambda batch: lm_score_docs(_prepped_batch(batch), c12, c1, vocab),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Scores every micro-batch against the frozen (c12, c1, vocab) model
+# frames into (doc_id, n_bigrams, n_oov_bigrams, avg_bits). The model
+# frames should be persisted by the caller (each micro-batch joins them).
+run_lm_score = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="scores",
+    transform=lambda batch, c12, c1, vocab: lm_score_docs(_prepped_batch(batch), c12, c1, vocab),
+)

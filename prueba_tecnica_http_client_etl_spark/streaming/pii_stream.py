@@ -22,11 +22,14 @@ idempotent per-batch-overwrite contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textprep as tp
 from ..operators.curation import _dirty_col, scrub_pii_docs
+from .runner import run_transform_stream
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -38,30 +41,13 @@ def _dirtied_batch(docs: DataFrame) -> DataFrame:
     return docs.withColumn("norm", F.expr(tp.SPARK_NORM)).withColumn("dirty", _dirty_col())
 
 
-def run_pii_scrub(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the document file stream to completion (availableNow),
-    scrubbing every micro-batch and writing (doc_id, n_emails,
-    n_phones, n_ips, redacted_fp, n_chars_clean) partitioned by
-    batch_id with idempotent per-batch overwrite. Returns the
-    read-back union. ordered=False: the per-batch parquet write
-    discards ordering, so the batch operator's final sort would be
-    per-micro-batch tax."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="scrubbed",
-        checkpoint=checkpoint,
-        transform=lambda batch: scrub_pii_docs(_dirtied_batch(batch), ordered=False),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Scrubs every micro-batch into (doc_id, n_emails, n_phones, n_ips,
+# redacted_fp, n_chars_clean). ordered=False: the per-batch parquet write
+# discards ordering, so the batch operator's final sort would be
+# per-micro-batch tax.
+run_pii_scrub = partial(
+    run_transform_stream,
+    schema=DOC_SCHEMA,
+    layer="scrubbed",
+    transform=lambda batch: scrub_pii_docs(_dirtied_batch(batch), ordered=False),
+)

@@ -79,21 +79,17 @@ def run_files_to_memory(
     """Drive the file stream to completion (availableNow) into a memory
     sink; one file per micro-batch exercises cross-batch buffering (a
     view in batch 1 joining a purchase arriving in batch 3)."""
-    from .tuning import assert_no_watermark_drops, stream_shuffle
+    from .runner import drain_to_memory
+    from .tuning import assert_no_watermark_drops
 
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if one_file_per_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    out = range_join_stream(reader.json(input_path))
-    with stream_shuffle(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = drain_to_memory(
+        spark,
+        input_path,
+        schema=EVENT_SCHEMA,
+        build=range_join_stream,
+        table_name=table_name,
+        one_file_per_batch=one_file_per_batch,
+    )
     # loud guard for the replay-completeness contract (WATERMARK_DELAY must
     # exceed the staged data's span): a silent late-drop would otherwise
     # just shrink the rows-only count.

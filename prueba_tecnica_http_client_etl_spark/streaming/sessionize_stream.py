@@ -117,19 +117,14 @@ def run_files_to_memory(
 ) -> DataFrame:
     """Test harness: drive the file stream to completion, one file per
     micro-batch so cross-batch state transitions are actually exercised."""
-    from .tuning import stream_shuffle
+    from .runner import drain_to_memory
 
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if one_file_per_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = sessionize_stream(reader.json(input_path))
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_to_memory(
+        spark,
+        input_path,
+        schema=EVENT_SCHEMA,
+        build=sessionize_stream,
+        table_name=table_name,
+        one_file_per_batch=one_file_per_batch,
+    )
     return spark.table(table_name)

@@ -13,8 +13,8 @@ Shrinking shuffle partitions for the duration of the stream run bounds that
 fixed cost. Results are partition-count-invariant (state is keyed by the
 shuffle hash; the emitted row set does not depend on partition count) and
 the temp checkpoint is per-run, so no checkpoint ever sees two different
-partition counts. On a real cluster the same knob is sized UP with state
-volume — the point is that it is a knob, not a constant.
+partition counts. On a real cluster the count is sized UP with state
+volume.
 """
 
 from __future__ import annotations
@@ -27,10 +27,10 @@ STREAM_SHUFFLE_PARTITIONS = 8
 
 
 @contextmanager
-def stream_shuffle(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
+def stream_shuffle(spark: SparkSession):
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, str(STREAM_SHUFFLE_PARTITIONS))
     try:
         yield
     finally:

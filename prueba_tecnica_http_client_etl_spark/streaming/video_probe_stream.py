@@ -26,7 +26,9 @@ not the s^2 batch-pair blowup the batch valve refuses).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
@@ -34,6 +36,7 @@ from ..operators.multimodal import (
     _VID_CONTAIN_NUM,
     _video_fh_batches,
 )
+from .runner import run_transform_stream
 
 DOC_SCHEMA = "doc_id long"
 
@@ -89,29 +92,7 @@ def probe_video_batch(
     )
 
 
-def run_video_probe(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    *,
-    index_fhd: DataFrame,
-    index_sizes: DataFrame,
-    checkpoint: str,
-    one_file_per_batch: bool = False,
-) -> DataFrame:
-    """Drive the arrival stream to completion (availableNow), probing
-    every micro-batch against the frozen frame index, with idempotent
-    per-batch overwrite (the runner contract). Returns the read-back
-    union."""
-    from .runner import run_transform_stream
-
-    return run_transform_stream(
-        spark,
-        input_path,
-        out_root,
-        schema=DOC_SCHEMA,
-        layer="verdicts",
-        checkpoint=checkpoint,
-        transform=lambda batch: probe_video_batch(batch, index_fhd, index_sizes),
-        one_file_per_batch=one_file_per_batch,
-    )
+# Probes every arriving micro-batch against the frozen frame index.
+run_video_probe = partial(
+    run_transform_stream, schema=DOC_SCHEMA, layer="verdicts", transform=probe_video_batch
+)

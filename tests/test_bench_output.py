@@ -90,12 +90,14 @@ def test_canary_series_is_shed_as_one_unit():
 
 
 def test_streams_run_last_including_non_suffix_names():
-    import inspect
+    from prueba_tecnica_http_client_etl_spark.streaming.runner import replay
 
     order = bench.run_order(registry.QUERIES)
     assert sorted(order) == sorted(registry.QUERIES)
-    # a streaming query is one that stages its input as a file stream
-    streams = {n for n, fn in registry.QUERIES.items() if "_stream_staging_path" in inspect.getsource(fn)}
+    # a streaming query is one that runs through the stream replay path,
+    # and every one of them is a row of the spec table
+    streams = {n for n, fn in registry.QUERIES.items() if getattr(fn, "func", None) is replay}
+    assert streams == set(registry.STREAMS)
     assert len(streams) == 19
     assert set(order[-len(streams):]) == streams
     assert "dedup_stream_ttl" in streams

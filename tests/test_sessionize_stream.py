@@ -63,7 +63,7 @@ def test_single_event_session(result):
 def test_registry_replay_is_single_batch(spark):
     """The registry's sessionize_stream oracle is only sound because the
     replay is ONE file -> one availableNow micro-batch (the closed-set
-    determinism argument in registry.q_sessionize_stream). Guard the
+    determinism argument beside the sessionize_stream row in registry.py). Guard the
     staging contract: re-adding a repartition(N) there would silently
     turn the certified replay multi-batch."""
     import glob
@@ -71,9 +71,10 @@ def test_registry_replay_is_single_batch(spark):
 
     from tests.conftest import SF_SMOKE
     from prueba_tecnica_http_client_etl_spark import registry
+    from prueba_tecnica_http_client_etl_spark.streaming import runner
 
     registry.queries()["sessionize_stream"](spark, SF_SMOKE)
-    staged, _ = registry._stream_staging_path(SF_SMOKE, "sess_stream_in", "events")
+    staged, _ = runner._stream_staging_path(SF_SMOKE, "sess_stream_in", "events")
     parts = [p for p in glob.glob(os.path.join(staged, "part-*")) if not p.endswith(".crc")]
     assert len(parts) == 1, parts
 

@@ -101,14 +101,14 @@ def test_stream_run_dirs_unique_and_age_bounded(tmp_path, monkeypatch):
     import os
     import tempfile
 
-    from prueba_tecnica_http_client_etl_spark import registry
+    from prueba_tecnica_http_client_etl_spark.streaming import runner
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     sf = str(tmp_path / "sf0.01")
-    out1, ckpt1 = registry._stream_run_dirs(sf, "probe_test")
+    out1, ckpt1 = runner._stream_run_dirs(sf, "probe_test")
     (Path(out1) / "part-0000.parquet").write_text("x")
     (Path(ckpt1) / "offsets").mkdir()
-    out2, ckpt2 = registry._stream_run_dirs(sf, "probe_test")
+    out2, ckpt2 = runner._stream_run_dirs(sf, "probe_test")
     # a fresh invocation gets its OWN dirs and leaves the live run intact
     assert out2 != out1 and ckpt2 != ckpt1
     assert (Path(out1) / "part-0000.parquet").exists()
@@ -118,27 +118,122 @@ def test_stream_run_dirs_unique_and_age_bounded(tmp_path, monkeypatch):
     # a FINISHED run (marked _DONE) older than the staleness window is
     # swept on the next call
     old_run = Path(out1).parent
-    registry._finish_stream_run(out1)
-    assert (old_run / registry._RUN_DONE_MARKER).exists()
+    runner._finish_stream_run(out1)
+    assert (old_run / runner._RUN_DONE_MARKER).exists()
     import time
 
-    hour_ago = time.time() - registry._STAGING_STALE_AFTER_S - 60
+    hour_ago = time.time() - runner._STAGING_STALE_AFTER_S - 60
     os.utime(old_run, (hour_ago, hour_ago))
     # a marker-LESS sibling of the same age may be a concurrent
     # session's LIVE run (checkpoint writes never refresh the run dir's
     # own mtime) and must survive the normal threshold...
     live_run = Path(out2).parent
     os.utime(live_run, (hour_ago, hour_ago))
-    registry._stream_run_dirs(sf, "probe_test")
+    runner._stream_run_dirs(sf, "probe_test")
     assert not old_run.exists()
     assert live_run.exists()
     # ...but a marker-less dir past the orphan threshold (a crashed run
     # that never marked) is still reclaimed — disk stays bounded
-    ancient = time.time() - registry._ORPHAN_RUN_STALE_AFTER_S - 60
+    ancient = time.time() - runner._ORPHAN_RUN_STALE_AFTER_S - 60
     os.utime(live_run, (ancient, ancient))
-    registry._stream_run_dirs(sf, "probe_test")
+    runner._stream_run_dirs(sf, "probe_test")
     assert not live_run.exists()
     # distinct kinds / scale factors never collide
-    out3, _ = registry._stream_run_dirs(str(tmp_path / "sf0.1"), "probe_test")
-    out4, _ = registry._stream_run_dirs(sf, "other_kind")
+    out3, _ = runner._stream_run_dirs(str(tmp_path / "sf0.1"), "probe_test")
+    out4, _ = runner._stream_run_dirs(sf, "other_kind")
     assert len({Path(p).parent.parent for p in (out1, out3, out4)}) == 3
+
+
+def _publish(marker: str):
+    """A staging writer that publishes the way Spark does: a data file,
+    then the _SUCCESS marker."""
+
+    def write(p: str) -> None:
+        Path(p).mkdir(parents=True)
+        (Path(p) / "part-0.json").write_text(marker)
+        (Path(p) / "_SUCCESS").write_text("")
+
+    return write
+
+
+def test_staged_dir_without_success_is_evicted_and_restaged(tmp_path):
+    """A final staging dir without _SUCCESS (a crashed writer) would
+    replay incomplete data forever: it is evicted and restaged."""
+    from prueba_tecnica_http_client_etl_spark.streaming import runner
+
+    path = tmp_path / "kind_in_sf0p01_0123456789ab"
+    path.mkdir()
+    (path / "part-0.json").write_text("partial")
+    runner._ensure_staged(str(path), _publish("fresh"))
+    assert (path / "_SUCCESS").exists()
+    assert (path / "part-0.json").read_text() == "fresh"
+    assert [p.name for p in tmp_path.iterdir()] == [path.name]  # no .tmp left
+
+
+def test_orphaned_tmp_sibling_is_swept_only_when_stale(tmp_path):
+    """A `.tmp.<pid>` sibling older than the stale threshold is a crashed
+    writer's and is swept; a fresh one may be a live concurrent writer's
+    and is kept."""
+    import os
+    import time
+
+    from prueba_tecnica_http_client_etl_spark.streaming import runner
+
+    path = tmp_path / "kind_in_sf0p01_0123456789ab"
+    stale, fresh = (tmp_path / f"{path.name}.tmp.{pid}" for pid in (999991, 999992))
+    for d in (stale, fresh):
+        d.mkdir()
+        (d / "part-0.json").write_text("x")
+    old = time.time() - runner._STAGING_STALE_AFTER_S - 60
+    os.utime(stale, (old, old))
+    runner._ensure_staged(str(path), _publish("fresh"))
+    assert not stale.exists()
+    assert fresh.exists()
+    assert (path / "_SUCCESS").exists()
+
+
+def test_complete_staging_is_reused_without_writing(tmp_path):
+    from prueba_tecnica_http_client_etl_spark.streaming import runner
+
+    path = tmp_path / "kind_in_sf0p01_0123456789ab"
+    _publish("first")(str(path))
+
+    def must_not_write(p: str) -> None:
+        raise AssertionError(f"complete staging rewritten at {p}")
+
+    runner._ensure_staged(str(path), must_not_write)
+    assert (path / "part-0.json").read_text() == "first"
+
+
+def test_directory_table_rewritten_in_place_restages(spark, tmp_path, monkeypatch):
+    """Staging is keyed on the table's file identity (schemas._file_identity),
+    not on the table path's mtime: rewriting one part file of a directory
+    table in place leaves the directory's mtime alone, and the stream must
+    still restage instead of replaying the old JSONL."""
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prueba_tecnica_http_client_etl_spark import registry
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    table = tmp_path / "sf_dir" / "documents.parquet"
+    table.mkdir(parents=True)
+    part = table / "part-00000.parquet"
+
+    def write(texts):
+        pq.write_table(pa.table({"doc_id": list(range(len(texts))), "text": texts}), part)
+
+    def digests():
+        return {r.norm_md5 for r in registry.QUERIES["dedup_stream"](spark, str(table.parent)).collect()}
+
+    write(["alpha one", "beta two", "gamma three"])
+    first = digests()
+    assert len(first) == 3
+    st = os.stat(table)
+    write(["delta four", "epsilon five"])
+    os.utime(table, ns=(st.st_atime_ns, st.st_mtime_ns))
+    second = digests()
+    assert len(second) == 2 and not second & first
