@@ -33,10 +33,13 @@ therefore run training jobs when their plan is first built in a
 session (plan-shape tests included) — the lazy-frame contract in
 cachepool.py applies to operator-internal persists, not to artifacts.
 
-Keying: (builder name, absolute sf_dir, source-file mtime, Spark
-application id). The mtime component retrains on a changed corpus
-snapshot; the application id drops artifacts whose SparkContext died
-(their checkpoint blocks die with it). The store is bounded FIFO —
+Keying: (builder name, absolute sf_dir, source-table identity, Spark
+application id). The identity is schemas._file_identity's (realpath,
+inode, size, mtime_ns) of the table file, or of every file under a
+directory table, so any rewrite of the corpus snapshot retrains,
+including a part file rewritten in place, which leaves the directory's
+own mtime alone. The application id drops artifacts whose SparkContext
+died (their checkpoint blocks die with it). The store is bounded FIFO —
 evicting an entry only releases the frame reference; the ContextCleaner
 frees its localCheckpoint blocks when the frame is garbage-collected.
 """
@@ -48,6 +51,8 @@ from collections import OrderedDict
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..schemas import _file_identity
 
 # Sized above the engine's per-corpus artifact count (~25 distinct
 # names at round 17, growing ~2 per round): an LRU eviction of an
@@ -62,14 +67,13 @@ def artifact_key(
     name: str, spark: SparkSession, sf_dir: str, table: str = "documents"
 ) -> tuple:
     """Identity of a trained artifact: WHAT was trained (name), on WHICH
-    corpus snapshot (sf_dir + the source table's mtime), in WHICH Spark
-    application (checkpoint blocks are application-scoped)."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
+    corpus snapshot (sf_dir + the source table's file identity), in WHICH
+    Spark application (checkpoint blocks are application-scoped)."""
     try:
-        mtime = os.path.getmtime(path)
+        identity = _file_identity(os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:
-        mtime = -1.0
-    return (name, os.path.abspath(sf_dir), mtime, spark.sparkContext.applicationId)
+        identity = None
+    return (name, os.path.abspath(sf_dir), identity, spark.sparkContext.applicationId)
 
 
 def trained_artifact(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:

@@ -35,6 +35,19 @@ error, when the cache root can't be written, the conf dir holds a real
 file (anything but *.template), a JVM is already running, or the caller's
 own options name -Xshare or an archive. Deleting the cds directory is
 always safe.
+
+Young generation: in local[N] the driver JVM is the whole engine. Its live
+set after a full collection is about 100 MB, but G1 grows eden toward 60 % of the heap and
+cycles allocation through every region, so the process touches its whole
+heap. get_spark caps the young generation at an eighth of the sized heap
+(-XX:MaxNewSize=256m at 2 GiB) on both the archive and the plain start.
+At perfbench's 2 GiB heap on 4 cores, that took peak PSS from 2528 to
+1181 MB on etl_analytics and from 3019 to 1667 MB on corpus_stream
+(medians of 10 runs), with pass times unchanged: young collections are
+more frequent and each one is cheaper. A caller whose own options name
+-Xmn, NewSize, MaxNewSize or NewRatio, e.g.
+--driver-java-options "-Xmn512m", sizes the young generation instead and
+gets no cap.
 """
 
 from __future__ import annotations
@@ -43,6 +56,7 @@ import atexit
 import contextlib
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 import time
@@ -60,6 +74,8 @@ from pyspark.sql import SparkSession
 _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 # Environment variables whose JVM options reach the driver.
 _CALLER_OPTIONS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+# Caller options that size the young generation themselves.
+_YOUNG_GEN_FLAGS = ("-Xmn", "NewSize", "NewRatio")
 _PART_MAX_AGE_S = 3600  # older .part files belong to no running dump
 _DUMP_WAIT_S = 120
 
@@ -79,6 +95,19 @@ def default_driver_memory() -> str:
         return override
     ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     return f"{int(max(1, min(4, ram_gib // 6)))}g"
+
+
+def young_gen_options(heap: str) -> str:
+    """-XX:MaxNewSize at an eighth of `heap` (a JVM size such as "2g" or
+    "2048m"), or "" when the caller's options size the young generation
+    or `heap` is not a JVM size."""
+    if any(flag in os.environ.get(var, "") for var in _CALLER_OPTIONS for flag in _YOUNG_GEN_FLAGS):
+        return ""
+    m = re.fullmatch(r"(\d+)([kmgt]?)", heap.strip().lower())
+    if m is None:
+        return ""
+    size = int(m[1]) << 10 * " kmgt".index(m[2] or " ")
+    return f"-XX:MaxNewSize={size // 8 >> 20}m"
 
 
 def java_home() -> Path | None:
@@ -184,6 +213,7 @@ def publish_archive(proc: subprocess.Popen, part: Path, archive: Path) -> bool:
 
 def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     cores = default_parallelism()
+    heap = default_driver_memory()
     shuffle = shuffle_partitions if shuffle_partitions is not None else max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -223,18 +253,20 @@ def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions:
         # trips and 0.33 s with it on, 304 and 0.14 s with it off. The only
         # loss is the call-site fragment in analysis-error messages.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", default_driver_memory())
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # Off: the [Stage N: ...] bar shares a terminal line with the
         # result lines of bench.py and tools/.
         .config("spark.ui.showConsoleProgress", "false")
     )
     cds = cds_launch()
-    if cds is None:
-        return builder.getOrCreate()
     # The launcher puts spark.driver.defaultJavaOptions ahead of the
     # caller's --driver-java-options, so those still apply.
-    builder.config("spark.driver.defaultJavaOptions", cds.options)
+    java_options = " ".join(filter(None, (young_gen_options(heap), cds and cds.options)))
+    if java_options:
+        builder.config("spark.driver.defaultJavaOptions", java_options)
+    if cds is None:
+        return builder.getOrCreate()
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = str(cds.conf_dir)
     try:

@@ -22,6 +22,7 @@ production; kept NoTimeout here so finite replays are deterministic.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Iterator
 from typing import Any
 
@@ -32,6 +33,21 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 SESSION_GAP_S = 30 * 60
+
+# PySpark's grouped-state serializer (pyspark/sql/pandas/serializers.py,
+# dump_stream's construct_record_batch) appends an all-None padding frame
+# to the output frames of every Arrow batch and concatenates them, and
+# pandas 2.2 warns about that concat once per worker for any batch with
+# output rows, whatever this module yields (empty frames are dropped
+# before it). The batch is cast to the declared output schema afterwards,
+# so the dtype change the warning announces cannot reach the rows. The
+# Python workers import this module to unpickle _sessionize_group.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA entries",
+    category=FutureWarning,
+    module="pyspark.sql.pandas.serializers",
+)
 
 EVENT_SCHEMA = "user_id long, ts_s double, value double"
 

@@ -96,7 +96,7 @@ def test_artifacts_are_reused_not_rebuilt(spark):
 
 def test_key_tracks_corpus_snapshot(spark, tmp_path):
     """Retrain triggers: a different sf_dir, a different source table,
-    or a rewritten (new-mtime) snapshot of the same path must all
+    or a rewritten (new file identity) snapshot of the same path must all
     produce distinct keys; the same snapshot must key stably."""
     src = Path(SF_SMOKE) / "documents.parquet"
     d = tmp_path / "sf"
@@ -114,6 +114,35 @@ def test_key_tracks_corpus_snapshot(spark, tmp_path):
     time.sleep(0.01)
     os.utime(d / "documents.parquet")  # snapshot rewritten in place
     assert A.artifact_key("x", spark, str(d), "documents") != k1
+
+
+def test_in_place_part_rewrite_retrains(spark, tmp_path):
+    """A part file rewritten in place under a directory table keeps the
+    directory's mtime, inode and entries; the key follows the part file,
+    so the next call retrains instead of serving the stale artifact."""
+    import time
+
+    table = tmp_path / "sf" / "documents.parquet"
+    table.mkdir(parents=True)
+    part = table / "part-00000.parquet"
+    shutil.copy(Path(SF_SMOKE) / "documents.parquet", part)
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(1)
+
+    A.clear()
+    A.trained_artifact(A.artifact_key("x", spark, str(table.parent), "documents"), build)
+    A.trained_artifact(A.artifact_key("x", spark, str(table.parent), "documents"), build)
+    assert len(builds) == 1
+    dir_mtime = table.stat().st_mtime_ns
+    time.sleep(0.01)
+    part.write_bytes(part.read_bytes())  # same inode, same size, new mtime
+    assert table.stat().st_mtime_ns == dir_mtime
+    A.trained_artifact(A.artifact_key("x", spark, str(table.parent), "documents"), build)
+    assert len(builds) == 2
+    A.clear()
 
 
 def test_consumer_reads_artifact_not_retrain(spark):

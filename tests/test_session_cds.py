@@ -1,7 +1,8 @@
 """The driver JVM's class-data-sharing archive (session.py): its key, when
 a launch uses it, how a dump is published, and, in fresh processes, that
-the archive merges with the caller's JVM options, keeps stdout clean and
-never breaks a session, even when the file at its path is garbage."""
+the archive merges with the caller's JVM options and the young-generation
+cap, keeps stdout clean and never breaks a session, even when the file at
+its path is garbage."""
 
 from __future__ import annotations
 
@@ -165,7 +166,10 @@ spark = get_spark("cds-probe")
 spark.sparkContext.setLogLevel("ERROR")
 assert spark.range(1000).selectExpr("sum(id)").collect()[0][0] == 499500
 jvm = spark.sparkContext._jvm
-print("ARGS " + json.dumps(list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())))
+mx = jvm.java.lang.management.ManagementFactory
+print("ARGS " + json.dumps(list(mx.getRuntimeMXBean().getInputArguments())))
+hotspot = mx.getPlatformMXBean(jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+print("VM " + json.dumps({o: hotspot.getVMOption(o).getValue() for o in ("MaxNewSize", "UseSharedSpaces")}))
 """
 
 
@@ -186,26 +190,32 @@ def _run(args: list[str], cache: Path) -> subprocess.CompletedProcess:
     return proc
 
 
-def _jvm_args(proc: subprocess.CompletedProcess) -> list[str]:
-    [line] = [line for line in proc.stdout.splitlines() if line.startswith("ARGS ")]
-    return json.loads(line[len("ARGS "):])
+def _probe(proc: subprocess.CompletedProcess, tag: str):
+    [line] = [line for line in proc.stdout.splitlines() if line.startswith(f"{tag} ")]
+    return json.loads(line[len(tag) + 1:])
 
 
 def test_archive_build_use_and_garbage_in_fresh_processes(tmp_path):
     cache = tmp_path / "cache"
     root = cache / "spark-graft" / "cds"
     try:
-        # no archive: the run dumps one at exit and publishes it
-        built = _jvm_args(_run(["-c", PROBE], cache))
+        # no archive: the run dumps one at exit and publishes it; the
+        # young generation is capped at an eighth of the 1g heap
+        proc = _run(["-c", PROBE], cache)
+        built = _probe(proc, "ARGS")
         assert "-Xms1g" in built
         assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in built)
+        assert _probe(proc, "VM")["MaxNewSize"] == str(128 << 20)
         [archive] = root.glob("*.jsa")
         assert not list(root.glob("*.part"))
 
-        # the next run starts from it, with the caller's options kept
-        used = _jvm_args(_run(["-c", PROBE], cache))
+        # the next run starts from it, with the caller's options kept, and
+        # the cap costs no class-data sharing
+        proc = _run(["-c", PROBE], cache)
+        used = _probe(proc, "ARGS")
         assert "-Xms1g" in used
         assert f"-XX:SharedArchiveFile={archive}" in used
+        assert _probe(proc, "VM") == {"MaxNewSize": str(128 << 20), "UseSharedSpaces": "true"}
 
         # a garbage file at the archive path still gives a working session
         archive.chmod(0o644)

@@ -103,3 +103,35 @@ def test_null_events_are_guarded(spark, tmp_path):
     assert s0["n_events"] == 2        # the ts-less event is gone
     assert s0["duration_s"] == 600.0
     assert s0["total_value"] == 1.0   # 1.0 + 0.0, never 99.0 or NaN
+
+
+def test_replay_closing_no_session_warns_nothing(spark, tmp_path, monkeypatch):
+    """The registry replay, with three users whose one batch closes no
+    session, raises no pandas FutureWarning in the Python workers (PySpark's
+    grouped-state serializer concatenates an all-None padding frame into
+    every output batch) and still equals the oracle. The workers run with
+    FutureWarning as an error: a new worker environment starts a new
+    daemon."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prueba_tecnica_http_client_etl_spark import registry
+    from tests.conftest import SF_SMOKE
+    from tests.test_oracle_parity import _duck_result, _normalize, _spark_result
+
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    lone = events.slice(0, 3).to_pylist()
+    for i, row in enumerate(lone):  # three new users, one event each
+        row.update(event_id=10**6 + i, user_id=10**6 + i)
+    events = pa.concat_tables([events, pa.Table.from_pylist(lone, schema=events.schema)])
+    pq.write_table(events, tmp_path / "events.parquet")
+
+    with duckdb.connect() as duck:
+        duck.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+        d_rows, d_cols = _duck_result(duck, registry.oracle_sql()["sessionize_stream"])
+    assert not {r[d_cols.index("user_id")] for r in d_rows} & {row["user_id"] for row in lone}
+
+    monkeypatch.setitem(spark.sparkContext.environment, "PYTHONWARNINGS", "error::FutureWarning")
+    s_rows, s_cols = _spark_result(spark, registry.queries()["sessionize_stream"], str(tmp_path))
+    assert _normalize(s_rows, s_cols) == _normalize(d_rows, d_cols)
