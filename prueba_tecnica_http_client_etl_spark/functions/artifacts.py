@@ -3,7 +3,7 @@ persisted index plans).
 
 A production pipeline trains its quantizers, codebooks, ANN ground-truth
 audit tables, and duplicate-cluster labels ONCE per corpus snapshot and
-persists them (plans/lsh_index.py and plans/ivf_index.py are the on-disk
+persists them (plans/lsh_index.py and plans/pq_index.py are the on-disk
 forms); serving and audit queries then read the artifact instead of
 re-deriving it. The registry's queries are self-contained by contract
 (each is callable cold), so the FIRST query that needs an artifact

@@ -1327,7 +1327,7 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-M bigrams (everything below the cut is indistinguishable from
     unseen under smoothing), making the score join broadcastable.
 
-    The model build (lm_train_model) and the per-doc scoring
+    The model build (lm_trained_model) and the per-doc scoring
     (lm_score_docs) are shared VERBATIM with the streaming gate
     (streaming/lm_stream.py): a micro-batch scores through exactly
     these expressions, which is what lets the stream certify against
@@ -1357,25 +1357,6 @@ def _lm_bigrams(docs: DataFrame) -> DataFrame:
         )
         .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
-
-
-def lm_train_model(train_docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(c12, c1, vocab) model frames from a (doc_id, toks) train slice —
-    the once-per-snapshot trained state both the batch filter and the
-    streaming gate score against. The bigram table is pool-persisted
-    (it feeds both counting passes). This is the raw (non-canonical)
-    builder for caller-supplied slices; snapshot-keyed consumers go
-    through lm_trained_model."""
-    from ..functions.cachepool import managed_persist
-
-    train_bg = managed_persist(_lm_bigrams(train_docs))
-    c12 = train_bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = train_bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = (
-        train_docs.select(F.explode_outer("toks").alias("tok"))
-        .agg(F.countDistinct("tok").alias("v"))
-    )
-    return c12, c1, vocab
 
 
 def lm_trained_model(

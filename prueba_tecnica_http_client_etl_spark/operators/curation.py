@@ -21,8 +21,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1009,21 +1007,16 @@ SQL_CORPUS_BUILD_FUNNEL = _sql_corpus_build_funnel()
 # hand; at every certified gate scale the auto size lands ON the 2^16
 # floor, so the executed plans there are bit-identical to the
 # previously-certified fixed default).
-# The env pin still wins when set (the scale harness uses it to
-# demonstrate geometry effects at a held geometry), and the geometry
-# stays part of the trained artifact's identity either way, so bitmaps
-# trained at different (m, k) never serve each other.
+# The geometry stays part of the trained artifact's identity, so
+# bitmaps trained at different (m, k) never serve each other.
 BLOOM_BITS_PER_GRAM = 24  # target density; ~0.2% FP at k=4
 # BLOOM_BITS_LOG2: tests pin geometry by patching this attribute; when
-# None the env var / auto sizing decides at CALL time (round-12 review:
-# a module-import int() of the env crashed the whole package import on
-# a malformed value, and ignored env changes made after import)
-BLOOM_BITS_LOG2: int | None = None  # None = env pin, else auto
+# None the auto sizing decides at CALL time
+BLOOM_BITS_LOG2: int | None = None  # None = auto
 BLOOM_MIN_BITS_LOG2 = 6  # hard floor: below 2^6 the packed-long bitmap
 # would have ZERO words (m // 64 == 0) and the prober's element_at
-# would fault — the floor is structural, applied to EVERY source of
-# the geometry including the env pin (round-12 review: it previously
-# guarded only the auto branch)
+# would fault — the floor is structural, applied to the pin as well
+# as to the auto size
 BLOOM_AUTO_MIN_BITS_LOG2 = 16  # auto-sizing floor: 1024 packed longs —
 # the r8-certified default geometry; tiny probe sets gain nothing from
 # a smaller bitmap
@@ -1031,25 +1024,12 @@ BLOOM_K = 4  # hash functions
 
 
 def bloom_bits_log2(n_probe_grams: int) -> int:
-    """log2(m) for the prescreen bitmap: the attribute pin wins, then
-    the env pin, else the next power of two of
-    BLOOM_BITS_PER_GRAM * n_probe_grams floored at
-    BLOOM_AUTO_MIN_BITS_LOG2 (bits/gram in [24, 48) above it). Every
-    path is clamped to the structural BLOOM_MIN_BITS_LOG2 floor. A
-    malformed env value raises a config ValueError here, at use, not
-    an import-time crash of the whole package."""
-    pin = BLOOM_BITS_LOG2
-    if pin is None:
-        env = os.environ.get("SPARK_GRAFT_BLOOM_BITS_LOG2", "")
-        if env:
-            try:
-                pin = int(env)
-            except ValueError:
-                raise ValueError(
-                    f"SPARK_GRAFT_BLOOM_BITS_LOG2 must be an integer, got {env!r}"
-                ) from None
-    if pin is not None:
-        return max(BLOOM_MIN_BITS_LOG2, pin)
+    """log2(m) for the prescreen bitmap: the attribute pin wins, else
+    the next power of two of BLOOM_BITS_PER_GRAM * n_probe_grams floored
+    at BLOOM_AUTO_MIN_BITS_LOG2 (bits/gram in [24, 48) above it). Both
+    paths are clamped to the structural BLOOM_MIN_BITS_LOG2 floor."""
+    if BLOOM_BITS_LOG2 is not None:
+        return max(BLOOM_MIN_BITS_LOG2, BLOOM_BITS_LOG2)
     return max(
         BLOOM_AUTO_MIN_BITS_LOG2,
         (max(1, n_probe_grams) * BLOOM_BITS_PER_GRAM - 1).bit_length(),
@@ -1219,21 +1199,6 @@ def bloom_score_docs(
         )
     )
     return out.orderBy("doc_id") if ordered else out
-
-
-def _bloom_auto_geometry(spark: SparkSession, sf_dir: str) -> int:
-    """The m_log2 contamination_bloom derives for this corpus — for
-    tests/harnesses that reconstruct the artifact key or assert the
-    bits-per-gram band. Runs its own probe-count pass (test-path only;
-    the operator itself counts the pooled frame its fold consumes)."""
-    d = docs_normalized(spark, sf_dir).withColumn("grams", F.expr(_SPARK_GRAMS))
-    n = (
-        d.filter(F.col("doc_id") % PROBE_STRIDE == 0)
-        .select(F.explode_outer("grams").alias("gram"))
-        .distinct()
-        .count()
-    )
-    return bloom_bits_log2(n)
 
 
 # the prescreen is lossless, so the exact check's SQL certifies it

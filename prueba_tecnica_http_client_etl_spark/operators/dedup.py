@@ -377,34 +377,14 @@ def lsh_hot_buckets(bands: DataFrame, *, max_bucket_size: int = LSH_MAX_BUCKET) 
     )
 
 
-def _capped_lsh_pairs(sh: DataFrame, *, max_bucket_size: int | None = LSH_MAX_BUCKET) -> DataFrame:
-    """The LSH candidate->verify chain over a CALLER-SUPPLIED shingle
-    frame (the non-canonical path: arbitrary corpora, adversarial test
-    fixtures — never the artifact store). Optionally excludes hot
-    buckets before pair generation (max_bucket_size=None disables the
-    cap). `sh` must be persisted by the caller (it feeds signatures +
-    both verify sides); signatures/bands are pool-persisted here."""
-    mh = managed_persist(_minhash_signatures(sh))
-    bands = managed_persist(band_table(mh))
-    if max_bucket_size is None:
-        cold = bands
-    else:
-        hot = lsh_hot_buckets(bands, max_bucket_size=max_bucket_size)
-        cold = bands.join(
-            F.broadcast(hot.select("band_idx", "band_hash")),
-            ["band_idx", "band_hash"],
-            "left_anti",
-        )
-    return _verify_pairs(_band_candidates(cold), sh)
-
-
 def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH pair finder with the hot-bucket cap engaged (cap
     LSH_MAX_BUCKET; rationale at the constant): bands anti-join the
     (broadcast) hot set, so no task ever materializes a hot bucket's
     quadratic pair list. Same output contract as dedup_minhash_lsh; on
     the natural corpus no bucket exceeds the cap so the two agree — the
-    adversarial divergence case is tests/test_lsh_hot_bucket.py. Reads
+    adversarial case (same cap, persisted index) is
+    tests/test_lsh_hot_bucket.py. Reads
     the same shingle/band artifacts as the flagship; the hot-bucket
     aggregate is the only extra work."""
     sh = lsh_shingles(spark, sf_dir).select("doc_id", "sh")

@@ -402,10 +402,8 @@ def ivf_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell occupancy of the strided IVF quantizer: (cell_id,
     n_vectors), one row per non-empty cell — the index-health monitor a
     production vector store watches. Cell balance IS the re-train
-    signal (append_to_ivf_index freezes the quantizer at ingest, so
-    corpus drift shows up here as a ballooning max cell long before
-    probe latency degrades; compact_ivf_index reports the same scalars
-    for the PERSISTED index, this query profiles the live assignment).
+    signal: under a frozen quantizer, corpus drift shows up here as a
+    ballooning max cell long before probe latency degrades.
 
     Scale shape: one vectorized centroid pass over the corpus (the same
     Arrow-batched assignment every IVF tier runs, _ivf_assign —
@@ -594,7 +592,7 @@ def _ivf_probe_topk(
         F.col("q").alias("qa"), F.col("nrm").alias("na"), *lbl,
     )
     key = ["cell", "label"] if same_label else ["cell"]
-    if vectorized and _use_cogroup_scoring(len(c_rows)):
+    if vectorized and len(c_rows) >= IVF_COGROUP_MIN_CELLS:
         pairs = _score_cells_vectorized(probes, corpus, key=key, same_label=same_label)
     else:
         cos = F.expr(_SPARK_PAIR_DOT).cast("double") / (F.col("na") * F.col("nb"))
@@ -626,26 +624,9 @@ def _ivf_probe_topk(
 # wins decisively (measured 100x, 256 cells: 18.5 -> 4.5 s). Cell count
 # tracks corpus size until CENTROID_MAX_K pins it, so certified-scale
 # corpora (6 cells at sf0.01, 21 at sf0.1) keep the join plan their
-# oracles were certified against — the same auto-with-env-pin pattern
-# as the Bloom geometry (curation.bloom_bits_log2): the pin wins, the
-# auto rule only moves work, never output.
+# oracles were certified against. The rule only moves work, never
+# output (tests force each side by patching this constant).
 IVF_COGROUP_MIN_CELLS = 128
-
-
-def _use_cogroup_scoring(n_cells: int) -> bool:
-    import os
-
-    pin = os.environ.get("SPARK_GRAFT_IVF_SCORING", "").strip().lower()
-    if pin in ("join", "relational"):
-        return False
-    if pin in ("cogroup", "vectorized"):
-        return True
-    if pin:
-        raise ValueError(
-            f"SPARK_GRAFT_IVF_SCORING={pin!r}: expected 'join'/'relational' "
-            "or 'cogroup'/'vectorized'"
-        )
-    return n_cells >= IVF_COGROUP_MIN_CELLS
 
 
 def _score_cells_vectorized(probes: DataFrame, corpus: DataFrame, *, key, same_label):
@@ -1202,7 +1183,7 @@ def _coarse_centroids(
     """The trained coarse quantizer as a session TRAINED ARTIFACT
     (functions/artifacts.py): a production IVF index trains its
     centroids once per corpus snapshot and persists them
-    (plans/ivf_index.py is the on-disk form) — here the first consumer
+    (plans/pq_index.py is the on-disk form) — here the first consumer
     in a session (kmeans_embeddings, the learned-IVF tier, or the
     IVF-PQ tier) pays the Lloyd update's corpus-wide assignment pass and
     every later consumer reuses the identical checkpointed k-row frame.
@@ -2882,7 +2863,7 @@ def _ivfpq_scored(
             queries, cents, nprobe=IVFPQ_NPROBE, vectorized=vectorized, _c_rows=c_rows
         )
     )
-    if vectorized and _use_cogroup_scoring(len(c_rows)):
+    if vectorized and len(c_rows) >= IVF_COGROUP_MIN_CELLS:
         cpv = codes.groupBy("vec_id", "cent_id").agg(
             F.expr(
                 "transform(array_sort(collect_list(struct(sub, code_id))), p -> p.code_id)"

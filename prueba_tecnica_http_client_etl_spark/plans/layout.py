@@ -60,62 +60,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-STAGE_SUFFIX = "__compact_stage"
-
-
-def heal_staged_swap(spark: SparkSession, table: str) -> bool:
-    """Recover a `replace_table_staged` swap that crashed between its
-    DROP and RENAME steps: the stage table holds the COMPLETE rewrite
-    (it was durably written and verified before the drop), so renaming
-    it into place finishes the interrupted swap. Returns True when a
-    heal happened. Compaction callers run this preamble for every table
-    they maintain, so a crashed compaction self-heals on the next run."""
-    stage = table + STAGE_SUFFIX
-    if not spark.catalog.tableExists(f"`{table}`") and spark.catalog.tableExists(f"`{stage}`"):
-        spark.sql(f"ALTER TABLE `{stage}` RENAME TO `{table}`")
-        return True
-    return False
-
-
-def replace_table_staged(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_cols: list[str] | None = None,
-    n_buckets: int | None = None,
-) -> None:
-    """Crash-safe rewrite of a catalog table from a plan that READS that
-    table (compaction's shape). saveAsTable(overwrite) on the table
-    itself is drop-then-write — and staging the sole copy through
-    localCheckpoint (non-reliable executor/driver memory blocks) means a
-    crash or lost block mid-rewrite destroys the index (round-12 ADVICE:
-    the exact in-place-rewrite hazard compaction.py's _refuse_overlap
-    refuses for parquet dirs). Instead:
-
-    1. write the full rewrite DURABLY to `{table}__compact_stage`
-       (reading the original is fine — it's a different table);
-    2. DROP the original;
-    3. ALTER TABLE RENAME the stage into place (metadata-only; the
-       bucket spec and data move with it).
-
-    Crash windows: before (2) the original is untouched and
-    authoritative (the stale stage is dropped at the start of the next
-    rewrite); between (2) and (3) the stage holds the complete rewrite
-    and `heal_staged_swap` renames it into place. At no point is the
-    only copy of the index in volatile storage."""
-    spark = df.sparkSession
-    stage = table + STAGE_SUFFIX
-    spark.sql(f"DROP TABLE IF EXISTS `{stage}`")
-    from .lsh_index import _clear_orphaned_location
-
-    _clear_orphaned_location(spark, stage)
-    writer = df.write.mode("overwrite").format("parquet")
-    if bucket_cols:
-        if n_buckets is None:
-            raise ValueError("bucket_cols requires n_buckets")
-        writer = writer.bucketBy(n_buckets, *bucket_cols)
-    writer.saveAsTable(stage)
-    spark.sql(f"DROP TABLE `{table}`")
-    spark.sql(f"ALTER TABLE `{stage}` RENAME TO `{table}`")

@@ -6,7 +6,7 @@ incremental deduplication.
 rebuilds the corpus-side signatures on every call. A real crawler ingest
 loop builds the index ONCE and amortizes it over every subsequent batch:
 
-    build_lsh_index(corpus_docs, prefix="corpus")     # once / on compaction
+    build_lsh_index(corpus_docs, prefix="corpus")     # once per corpus snapshot
     probe_lsh_index(spark, batch_docs, prefix="corpus")  # per batch
 
 Three catalog tables, each bucketed on its probe key so every per-batch
@@ -39,7 +39,7 @@ from ..operators.dedup import (
     band_table,
     lsh_hot_buckets,
 )
-from .layout import heal_staged_swap, replace_table_staged, write_bucketed
+from .layout import write_bucketed
 
 
 def _clear_orphaned_location(spark: SparkSession, name: str) -> None:
@@ -47,7 +47,7 @@ def _clear_orphaned_location(spark: SparkSession, name: str) -> None:
     on disk (a crashed build left files without metadata), remove the
     orphaned directory — saveAsTable(overwrite) has nothing to overwrite
     and refuses a non-empty location otherwise. Shared by every
-    build-once index writer (lsh_index, ivf_index).
+    build-once index writer (lsh_index, pq_index).
 
     Destructive-path guards (round-6 ADVICE): the `{warehouse}/{name}`
     path is the DEFAULT-database managed location, so (a) the existence
@@ -91,7 +91,7 @@ def build_lsh_index(docs: DataFrame, *, prefix: str, n_buckets: int = 8) -> None
     so overwrite has nothing to overwrite and refuses the non-empty dir)
     is detected and cleared first."""
     spark = docs.sparkSession
-    for suffix in ("digests", "bands", "shingles", "hotdrops"):
+    for suffix in ("digests", "bands", "shingles"):
         _clear_orphaned_location(spark, f"{prefix}_{suffix}")
     d = _prepped(docs).persist()
     bands = None
@@ -117,18 +117,9 @@ def build_lsh_index(docs: DataFrame, *, prefix: str, n_buckets: int = 8) -> None
         # finding class, flagged here by the round-8 ADVICE)
         bands = band_table(_minhash_signatures(d)).persist()
         hot = lsh_hot_buckets(bands, max_bucket_size=LSH_MAX_BUCKET)
-        # TOMBSTONE the dropped keys: a bucket capped away at build must
-        # STAY away — later appends anti-join this table, so an append
-        # re-populating a once-hot bucket below the cap cannot resurrect
-        # it (that would diverge from a one-shot capped rebuild, whose
-        # hotness is computed over the full membership). Tiny: one row
-        # per dropped (band_idx, band_hash).
-        hot.select("band_idx", "band_hash").write.mode("overwrite").format(
-            "parquet"
-        ).saveAsTable(f"{prefix}_hotdrops")
         write_bucketed(
             bands.join(
-                F.broadcast(spark.table(f"{prefix}_hotdrops")),
+                F.broadcast(hot.select("band_idx", "band_hash")),
                 ["band_idx", "band_hash"],
                 "left_anti",
             ),
@@ -148,159 +139,23 @@ def build_lsh_index(docs: DataFrame, *, prefix: str, n_buckets: int = 8) -> None
         d.unpersist()
 
 
-def _table_n_buckets(spark: SparkSession, table: str) -> int:
-    """Bucket count of a catalog table, read from DESCRIBE FORMATTED —
-    appends and compaction must reuse the spec the table was BUILT
-    with (a caller-supplied count that disagrees would either fail the
-    append or silently rebucket on overwrite)."""
-    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if row.col_name.strip() == "Num Buckets":
-            return int(row.data_type.strip())
-    raise ValueError(f"{table} is not bucketed — not an index table")
-
-
 def _require_index(spark: SparkSession, prefix: str, suffixes: tuple[str, ...]) -> None:
-    """Fail loudly when the index doesn't exist: mode('append') would
-    silently CREATE missing tables, so a typo'd or never-built prefix
-    would swallow the batch into a parallel index nothing ever probes.
+    """Fail loudly when the index doesn't exist, instead of letting a
+    typo'd or never-built prefix surface as an unresolved table deep
+    inside a probe plan.
 
     UNQUALIFIED tableExists on purpose (round-12 review): the guarded
-    operations (spark.table / saveAsTable) resolve against the
-    session's CURRENT database, so the guard must resolve the same way
-    — a `default`-qualified check would disagree with them whenever a
-    caller has switched databases. (_clear_orphaned_location is the
-    opposite case: it inspects the default-DB filesystem PATH, so its
-    qualified check is the one that matches what it touches.)
-
-    A missing table first gets one heal attempt (heal_staged_swap): a
-    compaction that crashed between its drop and rename steps leaves
-    the complete rewrite under `{table}__compact_stage` — renaming it
-    into place is recovery, not error, and makes every index entry
-    point (probe, append, compact) self-healing."""
-    missing = [
-        s
-        for s in suffixes
-        if not spark.catalog.tableExists(f"`{prefix}_{s}`")
-        and not heal_staged_swap(spark, f"{prefix}_{s}")
-    ]
+    reads (spark.table) resolve against the session's CURRENT database,
+    so the guard must resolve the same way — a `default`-qualified check
+    would disagree with them whenever a caller has switched databases.
+    (_clear_orphaned_location is the opposite case: it inspects the
+    default-DB filesystem PATH, so its qualified check is the one that
+    matches what it touches.)"""
+    missing = [s for s in suffixes if not spark.catalog.tableExists(f"`{prefix}_{s}`")]
     if missing:
         raise ValueError(
             f"index '{prefix}' is missing tables {missing} — build the index first"
         )
-
-
-def append_to_lsh_index(batch: DataFrame, *, prefix: str) -> None:
-    """ACCEPT a probed batch into the index — the ingest-loop step
-    between probe and the next batch: the crawler probes arrivals,
-    keeps the novel ones, and appends their (digest, bands, shingles)
-    so every LATER batch is deduplicated against them too. Signatures
-    are derived here once — the sign-once-at-ingest event the round-12
-    probe-memo adjudication describes — and never again (the stored
-    band rows ARE the signature state).
-
-    Appends write additional bucketed files into the existing catalog
-    tables (bucket spec read FROM the catalog, so pruning and the
-    shuffle-free probe joins keep holding); a missing table fails
-    loudly instead of mode('append') silently creating a parallel
-    index nothing probes. New band rows anti-join the build-time
-    tombstones ({prefix}_hotdrops): a bucket capped away at build
-    stays away, so append-grown and one-shot-rebuilt indexes keep
-    agreeing. Per-append cost is |batch| x bands rows, independent of
-    index size — no rebuild, no read-modify-write.
-
-    Delivery is at-least-once, NOT atomic: three table appends with no
-    transaction, so a mid-append failure + retry can duplicate rows.
-    Duplicates never flip a verdict to dup/novel wrongly (the digest
-    tier is distinct; band candidates are distinct pairs) but they
-    inflate n_near_candidates and bucket_size counts —
-    compact_lsh_index dedups all three tables, which is the heal step
-    after any suspected partial append (the same compaction window
-    that re-caps hot buckets).
-
-    Equivalence contract (tests/test_lsh_index.py): probing after
-    append(B) is byte-identical to probing against an index BUILT from
-    corpus + B in one shot, up to buckets B pushes OVER the cap —
-    those appear hot only to the one-shot build until
-    compact_lsh_index runs (re-evaluating the cap per append would
-    need the appended buckets' full membership). The
-    build/append/compact split is the one production LSH services
-    run."""
-    spark = batch.sparkSession
-    _require_index(spark, prefix, ("digests", "bands", "shingles", "hotdrops"))
-    d = _prepped(batch).persist()
-    try:
-        d.select("digest", "doc_id").write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_digests"), "digest"
-        ).saveAsTable(f"{prefix}_digests")
-        new_bands = band_table(_minhash_signatures(d)).join(
-            F.broadcast(spark.table(f"{prefix}_hotdrops")),
-            ["band_idx", "band_hash"],
-            "left_anti",
-        )
-        new_bands.write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_bands"), "band_hash"
-        ).saveAsTable(f"{prefix}_bands")
-        d.select("doc_id", "sh").write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_shingles"), "doc_id"
-        ).saveAsTable(f"{prefix}_shingles")
-    finally:
-        d.unpersist()
-
-
-def compact_lsh_index(spark: SparkSession, *, prefix: str) -> int:
-    """Periodic index maintenance — one scan of the index state, never
-    of the corpus: (1) DEDUP all three tables (heals duplicate rows
-    from retried at-least-once appends, which would otherwise inflate
-    n_near_candidates and bucket_size counts — a genuine 5-member
-    bucket duplicated once would read 10 > cap and be wrongly
-    dropped); (2) re-apply the hot-bucket cap over the deduped band
-    table and add the newly-dropped keys to the {prefix}_hotdrops
-    tombstones, so buckets grown past LSH_MAX_BUCKET by appends stop
-    fanning out probes AND stay dropped under future appends. Bucket
-    specs are read from the catalog. Returns the number of newly
-    tombstoned hot buckets.
-
-    The collect is bounded, documented driver state: hot buckets are
-    (band_idx, band_hash) keys whose membership exceeds the cap, so
-    their count is at most |band rows| / LSH_MAX_BUCKET and in
-    practice the handful of boilerplate clusters — the same
-    driver-bounded class as the hot-bucket broadcast in the batch
-    dedup path.
-
-    Every rewrite goes through layout.replace_table_staged — a DURABLE
-    stage table then a drop+rename swap — never through an in-place
-    overwrite staged in checkpoint memory (round-12 ADVICE: a crash or
-    lost block mid-rewrite would destroy the sole copy of the index).
-    A compaction interrupted between drop and rename self-heals at the
-    next index operation (_require_index runs heal_staged_swap).
-    Rewrite order is deliberate: hotdrops BEFORE bands — if the run
-    dies between them, the bands table still holds the hot rows, so
-    the re-run re-detects them (the tombstone rewrite is idempotent:
-    old union new, distinct); bands-first would lose the hot keys'
-    only evidence before their tombstones landed."""
-    _require_index(spark, prefix, ("digests", "bands", "shingles", "hotdrops"))
-
-    def rewrite(table: str, df: DataFrame, bucket_col: str) -> None:
-        replace_table_staged(
-            df, table, bucket_cols=[bucket_col], n_buckets=_table_n_buckets(spark, table)
-        )
-
-    rewrite(f"{prefix}_digests", spark.table(f"{prefix}_digests").distinct(), "digest")
-    rewrite(f"{prefix}_shingles", spark.table(f"{prefix}_shingles").distinct(), "doc_id")
-
-    bands = spark.table(f"{prefix}_bands").distinct()
-    hot = lsh_hot_buckets(bands, max_bucket_size=LSH_MAX_BUCKET).collect()
-    drops = spark.table(f"{prefix}_hotdrops").select("band_idx", "band_hash")
-    if hot:
-        hot_df = spark.createDataFrame(hot).select("band_idx", "band_hash")
-        bands = bands.join(F.broadcast(hot_df), ["band_idx", "band_hash"], "left_anti")
-        drops = drops.unionByName(hot_df)
-    # hotdrops is rewritten distinct every compaction (round-12 ADVICE:
-    # the old mode('append') re-tombstoned the same keys on a retried
-    # compaction, growing the broadcast anti-join side without bound)
-    replace_table_staged(drops.distinct(), f"{prefix}_hotdrops")
-    rewrite(f"{prefix}_bands", bands, "band_hash")
-    return len(hot)
 
 
 def probe_lsh_index(
@@ -323,8 +178,7 @@ def probe_lsh_index(
     decision."""
     from ..functions.cachepool import managed_persist
 
-    # fail loudly on a missing index (and self-heal a compaction swap
-    # that crashed between drop and rename) before reading any table
+    # fail loudly on a missing index before reading any table
     _require_index(spark, prefix, ("digests", "bands", "shingles"))
     inc = managed_persist(_prepped(batch))
 

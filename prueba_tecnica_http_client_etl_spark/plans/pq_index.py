@@ -1,16 +1,13 @@
-"""Persisted IVF-PQ code-index lifecycle — the durable form of the
-similarity tier's cheapest serving representation (judge r17 item 3).
+"""Persisted IVF-PQ code index — the durable form of the similarity
+tier's cheapest serving representation (judge r17 item 3).
 
-`plans/ivf_index.py` persists *full vectors* in its inverted lists; the
-engine's own 100 TB argument (operators/similarity.py::ann_ivfpq_topk)
+The engine's own 100 TB argument (operators/similarity.py::ann_ivfpq_topk)
 is that a petabyte corpus is scanned as cell id + 40-bit PQ codes, with
 full vectors touched only as bounded point lookups for the re-rank.
 This module persists exactly that layout:
 
     build_pq_index(emb, prefix="vecs")                  # once / re-train
     probe_pq_index(spark, queries, prefix="vecs")       # per query batch
-    append_to_pq_index(new_vecs, prefix="vecs")         # ingest ACCEPT
-    compact_pq_index(spark, prefix="vecs")              # periodic heal
 
 Four catalog tables:
 
@@ -18,9 +15,7 @@ Four catalog tables:
   quantizer; tiny, collected and broadcast at probe time.
 - `{prefix}_codebook` (sub, code_id, cv, cself)    — the PQ_M x PQ_K
   residual sub-codebooks; tiny, collected at probe time. Both trained
-  tables are FROZEN between re-trains: appends assign and encode under
-  them, never retrain at ingest (drifting codebooks would silently
-  score old and new residents on different scales).
+  tables are FROZEN until the next build.
 - `{prefix}_codes`    (cent_id, vec_id, code_arr)  — the scan tier,
   BUCKETED by cent_id: one row per vector, PQ_M small ints (the 40-bit
   code). This is the ONLY corpus-sized state an ADC probe reads, and
@@ -39,15 +34,10 @@ the probe reuses the operators' own probe/scan kernels
 (_ivfpq_probe_cells / _ivfpq_score_cells), so the engine-wide
 bit-determinism argument transfers wholesale.
 
-Failure-mode hardening (the video-index lessons applied from day one):
-appends write codes FIRST, vecs second — a crash between the two
-leaves vectors that ADC-score correctly but raise loudly (raise_error)
-if they reach a re-rank fetch, never a silent wrong answer; a RETRIED
-append duplicates rows in both tables, which the probe does NOT mask
-(a duplicated code row occupies two top-k slots and evicts a genuine
-neighbor — the IVF-index lesson) — compact_pq_index is the heal, and
-its full-row distinct is exact because encode under frozen artifacts
-is a pure per-vector function.
+A build writes codes FIRST, vecs second: a rebuild that dies between
+the two leaves new codes next to the previous build's vectors, and a
+candidate with no refine row raises loudly (assert_true) if it reaches
+a re-rank fetch, never a silent wrong answer.
 
 Reference: no counterpart (/root/reference has no vectors; SURVEY.md
 §2.8 similarity tier).
@@ -74,7 +64,7 @@ from ..operators.similarity import (
     _trained_centroids,
 )
 from .layout import write_bucketed
-from .lsh_index import _clear_orphaned_location, _require_index, _table_n_buckets
+from .lsh_index import _clear_orphaned_location, _require_index
 
 _TABLES = ("cents", "codebook", "codes", "vecs")
 
@@ -85,8 +75,7 @@ _CODE_ARR_AGG = (
 
 def _residuals(emb: DataFrame, cents_t: DataFrame) -> DataFrame:
     """(vec_id, cent_id, q=residual) under the frozen quantizer — the
-    assignment is a pure per-vector function of the centroids, which is
-    what makes append-grown and one-shot-rebuilt indexes byte-equal."""
+    assignment is a pure per-vector function of the centroids."""
     return (
         _kmeans_assign(emb, cents_t)
         .select("vec_id", "q", "cent_id", "qc")
@@ -98,7 +87,7 @@ def _residuals(emb: DataFrame, cents_t: DataFrame) -> DataFrame:
 
 def _encode_rows(emb: DataFrame, cents_t: DataFrame, cb: DataFrame) -> DataFrame:
     """The scan-tier rows (cent_id, vec_id, code_arr) for `emb` under
-    frozen quantizer + codebook — shared by build and append."""
+    frozen quantizer + codebook."""
     resid = _residuals(emb, cents_t)
     return (
         _pq_encode(resid, cb, carry=["cent_id"])
@@ -113,16 +102,13 @@ def build_pq_index(
     prefix: str,
     n_buckets: int = 8,
     cents: DataFrame | None = None,
-    codebook: DataFrame | None = None,
 ) -> None:
-    """Train (or accept frozen) artifacts and materialize the four index
-    tables for `emb` (vec_id, q, nrm — similarity._quantized's schema).
-    Default training matches the in-session IVF-PQ tier exactly: k-means
-    coarse centroids (_trained_centroids) and strided-seed residual
-    sub-codebooks (_pq_codebook) — which is what makes probes byte-equal
-    to ann_ivfpq_topk/_rerank. Pass `cents`/`codebook` to rebuild under
-    FROZEN artifacts (the append==rebuild contract and the re-train
-    lifecycle both need it)."""
+    """Train artifacts and materialize the four index tables for `emb`
+    (vec_id, q, nrm — similarity._quantized's schema). Training matches
+    the in-session IVF-PQ tier exactly: k-means coarse centroids
+    (_trained_centroids, or the already-trained `cents`) and
+    strided-seed residual sub-codebooks (_pq_codebook) — which is what
+    makes probes byte-equal to ann_ivfpq_topk/_rerank."""
     spark = emb.sparkSession
     for suffix in _TABLES:
         _clear_orphaned_location(spark, f"{prefix}_{suffix}")
@@ -133,8 +119,7 @@ def build_pq_index(
         f"{prefix}_cents"
     )
     cents_t = spark.table(f"{prefix}_cents")
-    if codebook is None:
-        codebook = _pq_codebook(_residuals(emb, cents_t))
+    codebook = _pq_codebook(_residuals(emb, cents_t))
     codebook.select("sub", "code_id", "cv", "cself").write.mode("overwrite").format(
         "parquet"
     ).saveAsTable(f"{prefix}_codebook")
@@ -153,83 +138,11 @@ def build_pq_index(
     )
 
 
-def append_to_pq_index(emb: DataFrame, *, prefix: str) -> None:
-    """ACCEPT a vector batch: assign + encode under the FROZEN quantizer
-    and codebook already in the catalog (never retrain at ingest), then
-    append the scan rows and the refine rows as additional bucketed
-    files. Per-append cost is |batch| x (|cents| + PQ_M x PQ_K)
-    assignment/encode work plus two bucketed writes — independent of
-    index size, bucket layout preserved (bucket specs read FROM the
-    catalog; a missing table fails loudly).
-
-    Write order is codes FIRST, vecs second, deliberately: a crash
-    between the two leaves vectors that ADC-rank correctly but have no
-    refine row — probe_pq_index raises loudly if such a vector reaches
-    a re-rank fetch (raise_error on the missing vector), instead of the
-    vecs-first order's silent absence from the scan tier. At-least-once
-    retries duplicate rows in BOTH tables; duplicates are a real defect
-    here (a duplicated code row occupies two top-k slots and evicts a
-    genuine neighbor) and compact_pq_index is the heal."""
-    spark = emb.sparkSession
-    _require_index(spark, prefix, _TABLES)
-    emb = managed_persist(emb.select("vec_id", "q", "nrm"))
-    rows = _encode_rows(
-        emb, spark.table(f"{prefix}_cents"), spark.table(f"{prefix}_codebook")
-    )
-    rows.write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_codes"), "cent_id"
-    ).saveAsTable(f"{prefix}_codes")
-    emb.select("vec_id", "q", "nrm").write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_vecs"), "vec_id"
-    ).saveAsTable(f"{prefix}_vecs")
-
-
-def compact_pq_index(spark: SparkSession, *, prefix: str) -> dict:
-    """Periodic maintenance — one scan of each index table, never of the
-    corpus: full-row DISTINCT heals retried at-least-once appends
-    (encode under frozen artifacts is a pure per-vector function, so a
-    retried batch reproduces its rows byte-identically and distinct is
-    exact), staged-swap rewrite (never in-place), and the cell-balance
-    scalars that trigger a re-train — under a frozen quantizer, corpus
-    drift shows up as cell imbalance."""
-    from .layout import replace_table_staged
-
-    _require_index(spark, prefix, _TABLES)
-    out = {}
-    for table, bucket_col in ((f"{prefix}_codes", "cent_id"), (f"{prefix}_vecs", "vec_id")):
-        n_buckets = _table_n_buckets(spark, table)
-        before = spark.table(table).count()
-        replace_table_staged(
-            spark.table(table).distinct(), table, bucket_cols=[bucket_col], n_buckets=n_buckets
-        )
-        key = table.rsplit("_", 1)[1]
-        out[f"{key}_before"] = int(before)
-        out[f"{key}_after"] = int(spark.table(table).count())
-    stats = (
-        spark.table(f"{prefix}_codes")
-        .groupBy("cent_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.max("n").alias("max_cell"),
-            F.avg("n").alias("mean_cell"),
-        )
-        .collect()[0]
-    )
-    out.update(
-        n_cells=int(stats["n_cells"]),
-        max_cell=int(stats["max_cell"]),
-        mean_cell=float(stats["mean_cell"]),
-    )
-    return out
-
-
 def collect_pq_probe_state(spark: SparkSession, *, prefix: str) -> tuple:
     """Collect the FROZEN driver-side probe state once — catalog check,
     centroid rows in cent_id order, decoded codebook arrays — for reuse
     across many probe_pq_index calls against the same index. The state
-    is frozen by contract between re-trains (build/append never touch
-    cents/codebook), so a caller that probes repeatedly (the streaming
+    is frozen by contract until the next build, so a caller that probes repeatedly (the streaming
     ANN probe's per-micro-batch loop) can pay the two collect jobs and
     four catalog round-trips once instead of per batch (round-18 verdict
     item 1: per-batch re-collection was the suite's one perf weak).
@@ -270,7 +183,7 @@ def probe_pq_index(
        predicate -> pruned point lookups) and re-rank to TOPK with the
        exact brute-force arithmetic (_exact_rerank_topk's expression,
        verbatim). A candidate whose refine row is missing (a torn
-       append) raises loudly instead of scoring wrong.
+       rebuild) raises loudly instead of scoring wrong.
 
     rerank=False returns the pure-ADC top-k (ann_ivfpq_topk's schema
     and bytes); rerank=True returns ann_ivfpq_rerank's. Stage 2->3 is
@@ -333,10 +246,10 @@ def probe_pq_index(
     missing_msg = F.concat(
         F.lit(f"pq index '{prefix}' inconsistent: candidate vector "),
         F.col("neighbor_id").cast("string"),
-        F.lit(" has codes but no refine row in vecs (torn append?) — "
-              "re-append the batch or rebuild"),
+        F.lit(" has codes but no refine row in vecs (torn build?) — "
+              "rebuild the index"),
     )
-    # The torn-append guard lives in a FILTER, not a projection: a
+    # The torn-build guard lives in a FILTER, not a projection: a
     # raise_error inside a projected expression over an outer join's
     # null-padded row is evaluated (or not) depending on the physical
     # join AQE picks — measured both ways on this build — whereas a

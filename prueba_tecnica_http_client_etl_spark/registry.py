@@ -736,7 +736,7 @@ _stream(
 )
 
 # Streaming bigram-LM quality gate (streaming/lm_stream.py): the model
-# is trained once from the batch-side train slice (corpus.lm_train_model
+# is trained once from the batch-side train slice (corpus.lm_trained_model
 # — the same frames the batch filter uses; snapshot-keyed trained
 # artifacts, checkpointed, so every micro-batch joins pinned blocks),
 # the held slice replays as a file stream, and every micro-batch is

@@ -234,12 +234,8 @@ def get_spark(app_name: str = "prueba-tecnica-etl-spark", *, shuffle_partitions:
         # mis-estimated shuffled-hash build is an executor OOM, while
         # this bound caps the build side per task; corpus-sized joins
         # stay sort-merge either way (_corpus_sized merge hints take
-        # precedence over AQE's selection). Parameterised: clusters with
-        # more executor memory per task can raise it.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m"),
-        )
+        # precedence over AQE's selection).
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         # events.ts is parquet TIMESTAMP(NANOS); read as INT64 once at session
         # build so table loads never mutate shared session conf mid-query.

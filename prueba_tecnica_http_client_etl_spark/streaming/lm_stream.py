@@ -1,6 +1,6 @@
 """Streaming bigram-LM quality gate — the ingest-time shape of the
 CCNet-style filter (operators/corpus.py::lm_bigram_score): the model is
-trained ONCE per corpus snapshot (lm_train_model over the train slice),
+trained ONCE per corpus snapshot (lm_trained_model over the train slice),
 and each arriving micro-batch of documents is scored against it
 (lm_score_docs) — per-batch cost is |batch| bigrams joined to the fixed
 model, independent of how much has already streamed.

@@ -505,8 +505,7 @@ def main_hundred(only: list[str] | None) -> int:
             best = min(best, time.perf_counter() - t0)
         return best, nrows
 
-    _bb = Cu.BLOOM_BITS_LOG2 or os.environ.get("SPARK_GRAFT_BLOOM_BITS_LOG2") or "auto"
-    out = {"bloom_bits_log2": _bb, "replicas": HUNDRED}
+    out = {"bloom_bits_log2": Cu.BLOOM_BITS_LOG2 or "auto", "replicas": HUNDRED}
     for sf_dir, label in ((SF01, "sf0.1"), (SF2, "sf10")):
         A.clear()
         t0 = time.perf_counter()

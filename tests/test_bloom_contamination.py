@@ -16,6 +16,22 @@ from prueba_tecnica_http_client_etl_spark.operators.curation import (
 from tests.conftest import SF_SMOKE
 
 
+def _probe_gram_count(spark, stride):
+    """Distinct probe grams of the docs at `stride` — the count the
+    operator sizes its bitmap from."""
+    from pyspark.sql import functions as F
+
+    from prueba_tecnica_http_client_etl_spark.operators import curation as Cu
+
+    d = Cu.docs_normalized(spark, SF_SMOKE).withColumn("grams", F.expr(Cu._SPARK_GRAMS))
+    return (
+        d.filter(F.col("doc_id") % stride == 0)
+        .select(F.explode_outer("grams").alias("g"))
+        .distinct()
+        .count()
+    )
+
+
 def test_prescreen_is_lossless(spark):
     A.clear()
     drain()
@@ -33,7 +49,8 @@ def test_bitmap_is_memoized_trained_state(spark):
     from prueba_tecnica_http_client_etl_spark.operators import curation as Cu
 
     key = A.artifact_key(
-        f"contamination_bloom_bitmap_m{Cu._bloom_auto_geometry(spark, SF_SMOKE)}_k{Cu.BLOOM_K}",
+        f"contamination_bloom_bitmap_m{Cu.bloom_bits_log2(_probe_gram_count(spark, Cu.PROBE_STRIDE))}"
+        f"_k{Cu.BLOOM_K}",
         spark,
         SF_SMOKE,
         "documents",
@@ -75,14 +92,9 @@ def test_bloom_auto_geometry_tracks_probe_volume(spark, monkeypatch):
     BLOOM_AUTO_MIN_BITS_LOG2 floor), the output stays byte-identical to the
     exact check at BOTH probe scales, and the two scales' bitmaps live
     under DISTINCT geometry-keyed artifacts."""
-    from pyspark.sql import functions as F
-
     from prueba_tecnica_http_client_etl_spark.operators import curation as Cu
 
-    # force auto: clear the attribute pin AND the env pin (the env is
-    # consulted lazily at call time now, not baked in at import)
-    monkeypatch.setattr(Cu, "BLOOM_BITS_LOG2", None)
-    monkeypatch.delenv("SPARK_GRAFT_BLOOM_BITS_LOG2", raising=False)
+    monkeypatch.setattr(Cu, "BLOOM_BITS_LOG2", None)  # force auto
     geoms = {}
     # stride 97 is the production probe split (lands on the floor at
     # this corpus); stride 3 probes ~32x the docs, pushing the auto
@@ -100,15 +112,8 @@ def test_bloom_auto_geometry_tracks_probe_volume(spark, monkeypatch):
         want = sorted(tuple(r) for r in Cu.contamination_check(spark, SF_SMOKE).collect())
         assert got == want and len(got) > 0
         drain()
-        d = Cu.docs_normalized(spark, SF_SMOKE).withColumn("grams", F.expr(Cu._SPARK_GRAMS))
-        n = (
-            d.filter(F.col("doc_id") % stride == 0)
-            .select(F.explode_outer("grams").alias("g"))
-            .distinct()
-            .count()
-        )
+        n = _probe_gram_count(spark, stride)
         m_log2 = Cu.bloom_bits_log2(n)
-        assert m_log2 == Cu._bloom_auto_geometry(spark, SF_SMOKE)
         key = A.artifact_key(
             f"contamination_bloom_bitmap_m{m_log2}_k{Cu.BLOOM_K}", spark, SF_SMOKE, "documents"
         )
@@ -153,31 +158,16 @@ def test_losslessness_survives_a_saturated_filter(spark, monkeypatch):
 
 def test_bloom_geometry_pin_sources_and_floors(monkeypatch):
     """bloom_bits_log2 resolution order + floors (round-12 review): the
-    attribute pin wins over the env pin; BOTH pins clamp to the
-    structural BLOOM_MIN_BITS_LOG2 floor (below it the packed-long
-    bitmap has zero words and the prober faults); a malformed env value
-    raises a config ValueError at CALL time instead of crashing the
-    package import."""
-    import pytest
-
+    attribute pin wins over auto sizing and clamps to the structural
+    BLOOM_MIN_BITS_LOG2 floor (below it the packed-long bitmap has zero
+    words and the prober faults)."""
     from prueba_tecnica_http_client_etl_spark.operators import curation as Cu
 
     monkeypatch.setattr(Cu, "BLOOM_BITS_LOG2", None)
-    monkeypatch.delenv("SPARK_GRAFT_BLOOM_BITS_LOG2", raising=False)
     # auto floor
     assert Cu.bloom_bits_log2(1) == Cu.BLOOM_AUTO_MIN_BITS_LOG2
-    # env pin wins over auto, but clamps to the structural floor
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_BITS_LOG2", "23")
-    assert Cu.bloom_bits_log2(1) == 23
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_BITS_LOG2", "2")
-    assert Cu.bloom_bits_log2(1) == Cu.BLOOM_MIN_BITS_LOG2
-    # attribute pin wins over the env pin, same clamp
+    # attribute pin wins over auto, but clamps to the structural floor
     monkeypatch.setattr(Cu, "BLOOM_BITS_LOG2", 20)
     assert Cu.bloom_bits_log2(1) == 20
     monkeypatch.setattr(Cu, "BLOOM_BITS_LOG2", 1)
     assert Cu.bloom_bits_log2(1) == Cu.BLOOM_MIN_BITS_LOG2
-    # malformed env raises at use, with the variable name in the message
-    monkeypatch.setattr(Cu, "BLOOM_BITS_LOG2", None)
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_BITS_LOG2", "not-a-number")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_BLOOM_BITS_LOG2"):
-        Cu.bloom_bits_log2(1)

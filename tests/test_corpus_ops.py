@@ -166,18 +166,16 @@ def test_ivf_assign_vectorized_matches_relational_exactly(spark, monkeypatch):
     from prueba_tecnica_http_client_etl_spark.functions.cachepool import drain, managed_persist
     from prueba_tecnica_http_client_etl_spark.operators import similarity as S
 
-    # (vectorized flag, forced scoring strategy): the smoke corpus has
-    # too few cells for the cogroup auto-rule, so pin it explicitly to
+    # (vectorized flag, cogroup cell threshold): the smoke corpus has
+    # too few cells for the cogroup auto-rule, so move the threshold to
     # cover all three physical shapes — fully relational, vectorized
-    # assignment + join scoring, vectorized assignment + cogroup scoring
-    modes = [(False, None), (True, "join"), (True, "cogroup")]
+    # assignment + join scoring (threshold above any cell count),
+    # vectorized assignment + cogroup scoring (threshold 0)
+    modes = [(False, S.IVF_COGROUP_MIN_CELLS), (True, 10**9), (True, 0)]
     for same_label, nprobe in [(False, S.NPROBE), (True, S.FILTERED_NPROBE)]:
         outs = []
-        for vec, pin in modes:
-            if pin is None:
-                monkeypatch.delenv("SPARK_GRAFT_IVF_SCORING", raising=False)
-            else:
-                monkeypatch.setenv("SPARK_GRAFT_IVF_SCORING", pin)
+        for vec, min_cells in modes:
+            monkeypatch.setattr(S, "IVF_COGROUP_MIN_CELLS", min_cells)
             emb = managed_persist(S._quantized(spark, SF_SMOKE))
             cents = S._strided_seeds(emb).selectExpr(
                 "vec_id as cent_id", "q as qc", "nrm as nc"
@@ -490,8 +488,8 @@ def test_ivfpq_scored_dual_path_all_shapes(spark, monkeypatch):
     """The IVF-PQ serving chain must be byte-identical across its three
     physical shapes: fully relational, vectorized assign/encode/probe +
     relational ADC join, and vectorized + cogrouped ADC scan (the smoke
-    corpus has too few cells for the auto-rule, so the pin covers the
-    cogroup shape). Compared through the consumer's ranking at the
+    corpus has too few cells for the auto-rule, so a threshold of 0
+    covers the cogroup shape). Compared through the consumer's ranking at the
     rerank pool cut — the widest downstream cut."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
@@ -500,13 +498,10 @@ def test_ivfpq_scored_dual_path_all_shapes(spark, monkeypatch):
     from prueba_tecnica_http_client_etl_spark.functions.portable import roundn
     from prueba_tecnica_http_client_etl_spark.operators import similarity as S
 
-    modes = [(False, None), (True, "join"), (True, "cogroup")]
+    modes = [(False, S.IVF_COGROUP_MIN_CELLS), (True, 10**9), (True, 0)]
     outs = []
-    for vec, pin in modes:
-        if pin is None:
-            monkeypatch.delenv("SPARK_GRAFT_IVF_SCORING", raising=False)
-        else:
-            monkeypatch.setenv("SPARK_GRAFT_IVF_SCORING", pin)
+    for vec, min_cells in modes:
+        monkeypatch.setattr(S, "IVF_COGROUP_MIN_CELLS", min_cells)
         emb = managed_persist(S._quantized(spark, SF_SMOKE))
         w = Window.partitionBy("query_id").orderBy(F.col("cos_hat").desc(), F.col("neighbor_id"))
         df = (
@@ -523,20 +518,20 @@ def test_ivfpq_scored_dual_path_all_shapes(spark, monkeypatch):
 def test_score_cells_label_dtype_is_int32(spark, monkeypatch):
     """The cogrouped scorer fills the declared IntegerType label with an
     explicit int32 array (round-13 verdict nit) — and the filtered tier
-    under the cogroup pin still matches the relational output."""
+    scored by cogroup still matches the join-scored output."""
     from pyspark.sql import types as T
 
     from prueba_tecnica_http_client_etl_spark.functions.cachepool import drain, managed_persist
     from prueba_tecnica_http_client_etl_spark.operators import similarity as S
 
-    monkeypatch.setenv("SPARK_GRAFT_IVF_SCORING", "cogroup")
+    monkeypatch.setattr(S, "IVF_COGROUP_MIN_CELLS", 0)
     emb = managed_persist(S._quantized(spark, SF_SMOKE))
     cents = S._strided_seeds(emb).selectExpr("vec_id as cent_id", "q as qc", "nrm as nc")
     df = S._ivf_probe_topk(emb, cents, nprobe=S.NPROBE, same_label=True)
     assert df.schema["label"].dataType == T.IntegerType()
     cg = sorted(map(tuple, df.collect()))
     drain()
-    monkeypatch.setenv("SPARK_GRAFT_IVF_SCORING", "join")
+    monkeypatch.setattr(S, "IVF_COGROUP_MIN_CELLS", 10**9)
     emb = managed_persist(S._quantized(spark, SF_SMOKE))
     cents = S._strided_seeds(emb).selectExpr("vec_id as cent_id", "q as qc", "nrm as nc")
     jn = sorted(map(tuple, S._ivf_probe_topk(emb, cents, nprobe=S.NPROBE, same_label=True).collect()))

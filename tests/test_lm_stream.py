@@ -7,13 +7,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from prueba_tecnica_http_client_etl_spark.functions.cachepool import drain, managed_persist
+from prueba_tecnica_http_client_etl_spark.functions.cachepool import drain
 from prueba_tecnica_http_client_etl_spark.operators.corpus import (
     LM_HELD_STRIDE,
     lm_bigram_score,
-    lm_train_model,
+    lm_trained_model,
 )
-from prueba_tecnica_http_client_etl_spark.operators.dedup import docs_normalized
 from prueba_tecnica_http_client_etl_spark.streaming.lm_stream import run_lm_score
 from tests.conftest import SF_SMOKE
 
@@ -34,13 +33,7 @@ def _stage_held(spark, tmp_path, n_files=4):
 
 
 def _model(spark):
-    train = (
-        docs_normalized(spark, SF_SMOKE)
-        .select("doc_id", "toks")
-        .filter(F.col("doc_id") % LM_HELD_STRIDE != 0)
-    )
-    c12, c1, vocab = lm_train_model(train)
-    return managed_persist(c12), managed_persist(c1), managed_persist(vocab)
+    return lm_trained_model(spark, SF_SMOKE)
 
 
 def test_multi_batch_scores_equal_batch_filter(spark, tmp_path):

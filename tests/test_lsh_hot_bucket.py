@@ -1,8 +1,9 @@
 """Hot-bucket cap for the MinHash-LSH pair finder (operators/dedup.py
 LSH_MAX_BUCKET): on an adversarial boilerplate corpus where one band
-bucket holds >50% of all docs, the capped path must refuse that bucket's
-quadratic pair list, count exactly what it refused, and still find the
-genuine near-dup pairs outside it."""
+bucket holds >50% of all docs, the hot buckets must be detected and the
+refused pairs counted exactly, and the persisted index must refuse the
+hot bucket's near tier while still finding the genuine near-dup pair
+outside it."""
 
 from __future__ import annotations
 
@@ -13,7 +14,6 @@ from prueba_tecnica_http_client_etl_spark.functions import textprep as tp
 from prueba_tecnica_http_client_etl_spark.functions.cachepool import drain, managed_persist
 from prueba_tecnica_http_client_etl_spark.operators.dedup import (
     _cap_audit,
-    _capped_lsh_pairs,
     _minhash_signatures,
     band_table,
     lsh_hot_buckets,
@@ -54,35 +54,12 @@ def test_hot_buckets_detected(adversarial_sh):
     assert all(r["bucket_size"] == N_BOILER for r in hot)
 
 
-def test_capped_pairs_skip_hot_bucket_but_keep_genuine_pairs(adversarial_sh):
-    pairs = _capped_lsh_pairs(adversarial_sh, max_bucket_size=CAP).collect()
-    found = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    assert (100, 101) in found  # genuine near-dup survives the cap
-    # no pair from inside the hot boilerplate bucket was generated
-    assert not any(a < N_BOILER and b < N_BOILER for a, b in found)
-
-
 def test_cap_audit_counts_exactly(adversarial_sh):
     bands = band_table(_minhash_signatures(adversarial_sh))
     [audit] = _cap_audit(bands, max_bucket_size=CAP).collect()
     assert audit["n_hot_buckets"] == tp.LSH_BANDS
     assert audit["n_docs_affected"] == N_BOILER
     assert audit["n_pairs_dropped"] == tp.LSH_BANDS * (N_BOILER * (N_BOILER - 1) // 2)
-
-
-def test_cap_inert_on_clean_corpus(spark):
-    """With the cap above every bucket size, capped == uncapped output."""
-    from prueba_tecnica_http_client_etl_spark.operators.dedup import (
-        dedup_minhash_lsh,
-        docs_normalized,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    sh = managed_persist(docs_normalized(spark, sf).select("doc_id", "sh"))
-    capped = _capped_lsh_pairs(sh, max_bucket_size=10**6).collect()
-    uncapped = dedup_minhash_lsh(spark, sf).collect()
-    assert sorted(map(tuple, capped)) == sorted(map(tuple, uncapped))
-    drain()
 
 
 def test_incremental_probe_caps_hot_index_buckets(spark):

@@ -2,9 +2,8 @@
 be bit-identical to ann_ivfpq_topk / ann_ivfpq_rerank on the same corpus
 and quantizer, the ADC scan must read the bucketed codes table pruned to
 the probed cells, the re-rank fetch must be a pruned point lookup into
-the refine store, appends under frozen artifacts must equal a one-shot
-rebuild, retried-append duplicates must be healed by compaction, and a
-torn append (codes without vecs) must raise loudly at re-rank."""
+the refine store, and a torn build (codes without vecs) must raise
+loudly at re-rank."""
 
 from __future__ import annotations
 
@@ -112,128 +111,16 @@ def test_rerank_fetch_is_pruned_point_lookup(spark, built):
     )
 
 
-def _frozen_artifacts(spark, prefix):
-    cents = spark.createDataFrame(
-        [tuple(r) for r in spark.table(f"{prefix}_cents").collect()],
-        spark.table(f"{prefix}_cents").schema,
-    )
-    cb = spark.createDataFrame(
-        [tuple(r) for r in spark.table(f"{prefix}_codebook").collect()],
-        spark.table(f"{prefix}_codebook").schema,
-    )
-    return cents, cb
-
-
-def test_append_then_probe_equals_one_shot_build(spark):
-    """ACCEPT contract: after append(B) under the frozen quantizer and
-    codebook, probing must be byte-identical to an index built from
-    A union B in one shot under the SAME artifacts — assignment and
-    encode are per-vector functions of the frozen state. Appended
-    vectors must actually surface as neighbors, and the pruned bucketed
-    reads must survive the append."""
-    emb = _quantized(spark, SF_SMOKE).persist()
-    try:
-        # 90/10 split: the codebook trainer needs >= PQ_K x PQ_CB_STRIDE
-        # (416) vectors in A at the 500-vector smoke scale
-        part = F.col("vec_id") % 10
-        a, b = emb.filter(part != 1), emb.filter(part == 1)
-        queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        PQI.build_pq_index(a, prefix="t_pqapp", n_buckets=4)
-        PQI.append_to_pq_index(b, prefix="t_pqapp")
-        got = [
-            tuple(r)
-            for r in PQI.probe_pq_index(spark, queries, prefix="t_pqapp").collect()
-        ]
-
-        cents, cb = _frozen_artifacts(spark, "t_pqapp")
-        PQI.build_pq_index(
-            a.unionByName(b), prefix="t_pqapp2", n_buckets=4, cents=cents, codebook=cb
-        )
-        want = [
-            tuple(r)
-            for r in PQI.probe_pq_index(spark, queries, prefix="t_pqapp2").collect()
-        ]
-        assert got == want
-        appended_ids = {r.vec_id for r in b.select("vec_id").collect()}
-        assert any(n in appended_ids for _, n, _r, _c in got), (
-            "appended vectors never surface as neighbors"
-        )
-        plan = (
-            PQI.probe_pq_index(spark, queries, prefix="t_pqapp", rerank=False)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount" in plan, plan
-    finally:
-        emb.unpersist()
-        drain()
-
-
-def test_compact_heals_retried_append_duplicates(spark):
-    """A retried append duplicates code rows, and a duplicate is not
-    mere inflation: the probe ranks the same neighbor twice, evicting a
-    genuine neighbor from the top-k. compact_pq_index must restore
-    byte-identical probes, preserve the bucket specs, and report the
-    cell-balance re-train trigger."""
-    emb = _quantized(spark, SF_SMOKE).persist()
-    try:
-        # 90/10 split: the codebook trainer needs >= PQ_K x PQ_CB_STRIDE
-        # (416) vectors in A at the 500-vector smoke scale
-        part = F.col("vec_id") % 10
-        a, b = emb.filter(part != 1), emb.filter(part == 1)
-        queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        PQI.build_pq_index(a, prefix="t_pqcmp", n_buckets=4)
-        PQI.append_to_pq_index(b, prefix="t_pqcmp")
-        want = [
-            tuple(r)
-            for r in PQI.probe_pq_index(spark, queries, prefix="t_pqcmp").collect()
-        ]
-
-        PQI.append_to_pq_index(b, prefix="t_pqcmp")  # the retry
-        dup = [
-            tuple(r)
-            for r in PQI.probe_pq_index(spark, queries, prefix="t_pqcmp").collect()
-        ]
-        seen, has_dup = set(), False
-        for q, n, _rank, _cos in dup:
-            has_dup = has_dup or (q, n) in seen
-            seen.add((q, n))
-        assert has_dup and dup != want, "retried append produced no duplicate symptom"
-
-        stats = PQI.compact_pq_index(spark, prefix="t_pqcmp")
-        healed = [
-            tuple(r)
-            for r in PQI.probe_pq_index(spark, queries, prefix="t_pqcmp").collect()
-        ]
-        assert healed == want
-        n_a, n_b = a.count(), b.count()
-        assert stats["codes_before"] == n_a + 2 * n_b
-        assert stats["codes_after"] == n_a + n_b
-        assert stats["vecs_before"] == n_a + 2 * n_b
-        assert stats["vecs_after"] == n_a + n_b
-        assert stats["n_cells"] >= 1 and stats["max_cell"] >= stats["mean_cell"]
-    finally:
-        emb.unpersist()
-        drain()
-
-
 def test_missing_index_fails_loudly(spark, built):
     _, queries = built
     with pytest.raises(ValueError, match="missing tables"):
         PQI.probe_pq_index(spark, queries, prefix="t_pq_nope")
-    with pytest.raises(ValueError, match="missing tables"):
-        PQI.append_to_pq_index(queries, prefix="t_pq_nope")
-    with pytest.raises(ValueError, match="missing tables"):
-        PQI.compact_pq_index(spark, prefix="t_pq_nope")
 
 
 def test_torn_append_detected_loudly(spark):
     """Codes written, vecs write crashed: the vectors ADC-rank correctly
     (codes are complete) but any that reach the re-rank fetch must raise
     — never score from a silently-missing refine row."""
-    from prueba_tecnica_http_client_etl_spark.plans.lsh_index import _table_n_buckets
-
     emb = _quantized(spark, SF_SMOKE).persist()
     try:
         # 90/10 split: the codebook trainer needs >= PQ_K x PQ_CB_STRIDE
@@ -242,12 +129,12 @@ def test_torn_append_detected_loudly(spark):
         a, b = emb.filter(part != 1), emb.filter(part == 1)
         queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
         PQI.build_pq_index(a, prefix="t_pqtorn", n_buckets=4)
-        # simulate append_to_pq_index dying between its two writes
+        # codes for B with no refine rows: a write that died between them
         rows = PQI._encode_rows(
             b, spark.table("t_pqtorn_cents"), spark.table("t_pqtorn_codebook")
         )
         rows.write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, "t_pqtorn_codes"), "cent_id"
+            4, "cent_id"
         ).saveAsTable("t_pqtorn_codes")
         # ADC-only probes still serve (codes are complete and correct)
         adc = PQI.probe_pq_index(spark, queries, prefix="t_pqtorn", rerank=False)
